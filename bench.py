@@ -456,13 +456,7 @@ def main() -> None:
         return out
 
     s_samples = _sentinel_samples()
-    sentinel = round(statistics.median(s_samples[1:]), 3)
-    sentinel_cold = round(statistics.median(s_samples[:trials]), 3)
-    sentinel_spread = round(max(s_samples[1:]) - min(s_samples[1:]), 3)
-
-    warm: dict[str, float] = {}
-    cold: dict[str, float] = {}
-    spread: dict[str, float] = {}
+    samples_of: dict[str, list] = {}
     for name in names:
         samples = []
         for _ in range(trials + 1):
@@ -477,15 +471,43 @@ def main() -> None:
             # every run (and every later query) starts uncached
             release_persisted()
             spark.catalog.clearCache()
+        samples_of[name] = samples
+
+    # post-sweep sentinel: same shape, run after the last query family
+    p_samples = _sentinel_samples()
+    full = bench_payload(sf_dir, trials, samples_of, s_samples, p_samples)
+    # stdout carries exactly ONE compact JSON line: the caller keeps only a
+    # 2000-char tail of bench output, so the full per-line detail (cold
+    # medians, spreads, 3-decimal precision) goes to BENCH_DETAIL.json and
+    # stdout stays small enough to survive the capture intact.
+    compact = dict(full)
+    compact["queries"] = {k: round(v, 2) for k, v in full["queries"].items()}
+    del compact["queries_spread"]
+    del compact["queries_cold"]
+    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"), "w") as f:
+        json.dump(full, f, indent=1)
+    print(json.dumps(compact, separators=(",", ":")))
+    spark.stop()
+
+
+def bench_payload(
+    sf_dir: str, trials: int, samples_of: dict, s_samples: list, p_samples: list
+) -> dict:
+    """The full bench result (BENCH_DETAIL.json) from raw timings: each
+    line's ``trials + 1`` samples, and the pre/post sentinel samples."""
+    warm: dict[str, float] = {}
+    cold: dict[str, float] = {}
+    spread: dict[str, float] = {}
+    for name, samples in samples_of.items():
         cold[name] = round(statistics.median(samples[:trials]), 3)
         w = samples[1:]
         warm[name] = round(statistics.median(w), 3)
         # warm min..max range: how trustworthy is this query's median on
         # this box?  sub-1.5s queries historically swing +/-20-40%
         spread[name] = round(max(w) - min(w), 3)
-
-    # post-sweep sentinel: same shape, run after the last query family
-    p_samples = _sentinel_samples()
+    sentinel = round(statistics.median(s_samples[1:]), 3)
+    sentinel_cold = round(statistics.median(s_samples[:trials]), 3)
+    sentinel_spread = round(max(s_samples[1:]) - min(s_samples[1:]), 3)
     sentinel_post = round(statistics.median(p_samples[1:]), 3)
     sentinel_post_spread = round(max(p_samples[1:]) - min(p_samples[1:]), 3)
 
@@ -515,18 +537,7 @@ def main() -> None:
     ratio, contaminated = drift_flag(sentinel, sentinel_post)
     full["sentinel_drift"] = ratio
     full["sentinel_contaminated"] = contaminated
-    # stdout carries exactly ONE compact JSON line: the driver keeps only a
-    # 2000-char tail of bench output, so the full per-line detail (cold
-    # medians, spreads, 3-decimal precision) goes to BENCH_DETAIL.json and
-    # stdout stays small enough to survive the capture intact.
-    compact = dict(full)
-    compact["queries"] = {k: round(v, 2) for k, v in warm.items()}
-    del compact["queries_spread"]
-    del compact["queries_cold"]
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"), "w") as f:
-        json.dump(full, f, indent=1)
-    print(json.dumps(compact, separators=(",", ":")))
-    spark.stop()
+    return full
 
 
 if __name__ == "__main__":

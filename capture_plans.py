@@ -25,8 +25,10 @@ from collections import Counter
 
 # tree-section lines look like "   :  +- SortMergeJoin Inner (90)";
 # the details section repeats "(90) SortMergeJoin" — we parse the tree
-# (id-suffixed) form only.
-_NODE = re.compile(r"([A-Za-z][A-Za-z0-9_]*(?: [A-Za-z0-9_]+)*) \((\d+)\)\s*$")
+# (id-suffixed) form only.  A path scan prints an empty table name
+# ("Scan parquet  (8)", two spaces) and a catalog scan a dotted one
+# ("Scan parquet spark_catalog.default.t (5)"): both must match.
+_NODE = re.compile(r"([A-Za-z][A-Za-z0-9_]*(?: [A-Za-z0-9_.]+)*) +\((\d+)\)\s*$")
 
 _SUMMARY_OPS = (
     "Exchange",

@@ -118,7 +118,8 @@ def q_standard_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
         T(spark, sf_dir, "orders"),
         [{"name": "o_orderstatus", "tests": [{"allowed_values": ["F", "O"]}]}],
     )
-    assert cust is not None and orders is not None
+    if cust is None or orders is None:
+        raise ValueError("q_standard_tests: a declared column test generated no plan")
     return cust.unionByName(orders)
 
 

@@ -197,7 +197,156 @@ def _normed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         F.expr("cast(embedding as array<double>)").alias("e"),
-    ).withColumn("nrm", F.sqrt(F.expr("aggregate(e, 0D, (acc, x) -> acc + x * x)")))
+    ).withColumn("nrm", _norm())
+
+
+# --- ANN stages -----------------------------------------------------------
+#
+# Every ANN path of the engine composes the stages below: the registry
+# queries in this module, the catalog searches over ann_index-built
+# tables (ann_index_search*), the index build / insert / heal code
+# (operators/ann.py) and the streaming twins (streaming/materialise.py):
+#
+#   probe (_assign_cells) -> quantize | pq_encode (+ residual)
+#     -> scan -> shortlist -> exact re-rank (rounded cosine) -> top_k
+#
+# The scan join is the one step each caller owns: a cell equi-join
+# against a bucketed catalog table (_cell_scan, adc_shortlist with a
+# probe cell) or the registry's all-pairs join over the 10 standard
+# query vectors (_all_pairs).  No stage branches on its caller.
+
+
+def _dot(a: str, b: str) -> str:
+    """Left-to-right DOUBLE dot product of two array columns."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)"
+
+
+def _sq_dist(a: str, b: str) -> str:
+    """Left-to-right DOUBLE squared L2 distance of two array columns."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), 0D, "
+        "(acc, v) -> acc + v)"
+    )
+
+
+def _d2(a: str, b: str):
+    """Squared L2 rounded to 8dp — rounded BEFORE any argmin so both
+    engines rank on identical values."""
+    return F.round(F.expr(_sq_dist(a, b)), 8)
+
+
+def _norm(e: str = "e"):
+    return F.sqrt(F.expr(f"aggregate({e}, 0D, (acc, x) -> acc + x * x)"))
+
+
+def _cos():
+    """Cosine of (qe, qn) against (e, nrm), rounded to 6dp before any
+    ranking — the registry-wide convention."""
+    return F.round(F.expr(_dot("qe", "e")) / (F.col("qn") * F.col("nrm")), 6)
+
+
+def top_k(frame: DataFrame, k: int, *order, by="query_id") -> DataFrame:
+    """The ``k`` first rows per ``by`` key under ``order``, numbered in
+    ``rk`` (row_number: the last order key must be unique).  Compiles
+    to a WindowGroupLimit — partial top-k before the key exchange."""
+    w = Window.partitionBy(by).orderBy(*order)
+    return frame.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+
+
+def shortlist_by(scored: DataFrame, n: int, dist: str) -> DataFrame:
+    """(query_id, neighbor_id) of the ``n`` nearest per query under the
+    approximate distance column ``dist`` (neighbor_id breaks ties)."""
+    return top_k(scored, n, dist, "neighbor_id").select("query_id", "neighbor_id")
+
+
+def query_side(frame: DataFrame, *keep) -> DataFrame:
+    """(vec_id, e, nrm) -> (query_id, qe, qn, *keep), the query side."""
+    return frame.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("e").alias("qe"),
+        F.col("nrm").alias("qn"),
+        *keep,
+    )
+
+
+def neighbor_side(frame: DataFrame, *keep) -> DataFrame:
+    """(vec_id, e, nrm) -> (neighbor_id, e, nrm, *keep), the corpus side."""
+    return frame.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm", *keep)
+
+
+def cosine_topk(pairs: DataFrame, k: int, *keep: str) -> DataFrame:
+    """Exact top-k: (query_id, neighbor_id, *keep, cos, rk <= k) over
+    pairs carrying both sides' vectors (qe, qn, e, nrm)."""
+    scored = pairs.select("query_id", "neighbor_id", *keep, _cos().alias("cos"))
+    return top_k(scored, k, F.desc("cos"), "neighbor_id")
+
+
+def exact_rerank(
+    cand: DataFrame, queries: DataFrame, neighbors: DataFrame, k: int, *keep: str
+) -> DataFrame:
+    """Exact cosine re-rank of a shortlist: ``cand`` (query_id,
+    neighbor_id, *keep) fetches both sides' full vectors by key, so only
+    shortlisted rows ever touch full precision."""
+    pairs = cand.join(queries, "query_id").join(neighbors, "neighbor_id")
+    return cosine_topk(pairs, k, *keep)
+
+
+def _all_pairs(q: DataFrame, c: DataFrame) -> DataFrame:
+    """The registry scan join: every query against every other vector."""
+    return q.join(c, F.col("neighbor_id") != F.col("query_id"))
+
+
+def _bruteforce(nf: DataFrame, k: int) -> DataFrame:
+    """Exact cosine top-k of the 10 standard queries over normed ``nf``."""
+    return cosine_topk(
+        _all_pairs(query_side(nf.where(F.col("vec_id") < 10)), neighbor_side(nf)), k
+    )
+
+
+def _catalog_probe(
+    spark: SparkSession, index: str, queries: DataFrame, nprobe: int
+) -> tuple[DataFrame, DataFrame]:
+    """Probe stage of a catalog search: (q (vec_id, e), probes
+    (query_id, cell)) — each query routed to its ``nprobe`` nearest
+    cells of the broadcast ``{index}_centroids``."""
+    q = queries.select(
+        F.col("query_id").alias("vec_id"),
+        F.expr("cast(e as array<double>)").alias("e"),
+    )
+    probes = _assign_cells(q, spark.table(f"{index}_centroids"), nprobe=nprobe)
+    return q, probes.select(F.col("vec_id").alias("query_id"), "cell")
+
+
+def _catalog_queries(q: DataFrame) -> DataFrame:
+    """Query side of a catalog re-rank, with the zero-norm guard."""
+    # zero-norm guard, hoisted to the per-QUERY side (r14): a zero-norm
+    # query has undefined cosine against everything, so it honestly
+    # returns no neighbors — filtered ONCE here, on the tiny query
+    # frame, instead of try_divide + NULL-filter on every candidate row.
+    # Index-side zero norms cannot occur: ``{index}_vectors`` enforces
+    # nrm > 0 at build and ingest (operators/ann.py), so the
+    # per-candidate division is plain (one empty doc used to
+    # DIVIDE_BY_ZERO-kill every search probing its cell, review r13).
+    return query_side(q.withColumn("nrm", _norm())).where(F.col("qn") > 0)
+
+
+def _catalog_rerank(
+    spark: SparkSession, index: str, q: DataFrame, cand: DataFrame, k: int
+) -> DataFrame:
+    vectors = neighbor_side(spark.table(f"{index}_vectors"))
+    return exact_rerank(cand, _catalog_queries(q), vectors, k)
+
+
+def _cell_scan(codes: DataFrame, qside: DataFrame, dist: str, n: int) -> DataFrame:
+    """The catalog scan join: the query side (query_id, cell, ...)
+    broadcast against a cell-bucketed code table (neighbor_id, cell,
+    ...) read in place, shortlisted to ``n`` per query under ``dist``."""
+    scored = (
+        codes.join(F.broadcast(qside), "cell")
+        .where(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", F.expr(dist).alias("dist"))
+    )
+    return shortlist_by(scored, n, "dist")
 
 
 @register(
@@ -221,22 +370,7 @@ def q_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cosines are rounded BEFORE ranking so cross-engine ordering is
     identical; neighbor_id breaks remaining ties.
     """
-    n = _normed(spark, sf_dir)
-    q = n.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
-    c = n.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm")
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qn") * F.col("nrm")),
-        6,
-    )
-    scored = (
-        q.join(c, F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= 5)
+    return _bruteforce(_normed(spark, sf_dir), 5)
 
 
 @register(
@@ -291,25 +425,11 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = persist_tracked(
         _normed(spark, sf_dir).withColumn("bucket", F.expr(_BUCKET_SPARK))
     )
-    q = n.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qn"),
-        "bucket",
+    q = query_side(n.where(F.col("vec_id") < 10), "bucket")
+    c = neighbor_side(n, "bucket")
+    return cosine_topk(
+        q.join(c, "bucket").where(F.col("neighbor_id") != F.col("query_id")), 3
     )
-    c = n.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm", "bucket")
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qn") * F.col("nrm")),
-        6,
-    )
-    scored = (
-        q.join(c, "bucket")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= 3)
 
 
 # flip bit i (0-based) of an 8-char '0'/'1' bucket string — shared by the
@@ -361,28 +481,14 @@ def q_ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = persist_tracked(
         _normed(spark, sf_dir).withColumn("bucket", F.expr(_BUCKET_SPARK))
     )
-    q = (
-        n.where(F.col("vec_id") < 10)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.col("nrm").alias("qn"),
-            F.explode(F.expr(f"array_prepend({_FLIP_SPARK}, bucket)")).alias("bucket"),
-        )
+    q = query_side(
+        n.where(F.col("vec_id") < 10),
+        F.explode(F.expr(f"array_prepend({_FLIP_SPARK}, bucket)")).alias("bucket"),
     )
-    c = n.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm", "bucket")
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qn") * F.col("nrm")),
-        6,
+    c = neighbor_side(n, "bucket")
+    return cosine_topk(
+        q.join(c, "bucket").where(F.col("neighbor_id") != F.col("query_id")), 3
     )
-    scored = (
-        q.join(c, "bucket")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= 3)
 
 
 @register(
@@ -426,26 +532,12 @@ def q_ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = T(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.expr("cast(embedding as array<double>)").alias("e")
     )
-    comp = emb.select("label", F.posexplode("e").alias("pos", "x"))
-    cent = comp.groupBy("label", "pos").agg(
-        F.round(
-            F.sum(F.col("x").cast("decimal(20,10)")).cast("double") / F.count(F.lit(1)), 8
-        ).alias("c")
-    )
-    cent_arr = cent.groupBy(F.col("label").alias("c_label")).agg(
-        F.expr("transform(array_sort(collect_list(struct(pos, c))), s -> s.c)").alias("ce")
-    )
-    d2 = F.round(
-        F.expr("aggregate(zip_with(e, ce, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"),
-        8,
-    )
+    cent_arr = _centroid_arrays(emb)
     dists = emb.crossJoin(F.broadcast(cent_arr)).select(
-        "vec_id", "label", "c_label", d2.alias("d2")
+        "vec_id", "label", "c_label", _d2("e", "ce").alias("d2")
     )
-    w = Window.partitionBy("vec_id").orderBy("d2", "c_label")
     return (
-        dists.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
+        top_k(dists, 1, "d2", "c_label", by="vec_id")
         .groupBy(F.col("label").alias("true_label"), F.col("c_label").alias("assigned_label"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -482,22 +574,14 @@ def _assign_cells(emb: DataFrame, cent: DataFrame, nprobe: int = 1) -> DataFrame
     """(vec_id, cell) nearest-centroid assignment — broadcast the k
     centroids, fold the squared distance left-to-right, round before
     the argmin, tie-break on the cell label.  ``nprobe`` > 1 keeps the
-    n nearest cells per vector (the IVF multi-probe read path)."""
-    d2 = F.round(
-        F.expr(
-            "aggregate(zip_with(e, ce, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
-        ),
-        8,
+    n nearest cells per vector (the IVF multi-probe read path) — the
+    probe stage of every IVF path."""
+    dists = emb.crossJoin(F.broadcast(cent)).select(
+        "vec_id", "c_label", _d2("e", "ce").alias("d2")
     )
-    w = Window.partitionBy("vec_id").orderBy("d2", "c_label")
-    out = (
-        emb.crossJoin(F.broadcast(cent))
-        .select("vec_id", "c_label", d2.alias("d2"))
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= nprobe)
-        .select("vec_id", F.col("c_label").alias("cell"))
+    return top_k(dists, nprobe, "d2", "c_label", by="vec_id").select(
+        "vec_id", F.col("c_label").alias("cell")
     )
-    return out
 
 
 def ann_index_search(
@@ -518,51 +602,16 @@ def ann_index_search(
     (query_id, neighbor_id, cos, rk<=k) with the engine's determinism
     contract (rounded cosine, unique neighbor_id tie-break).
     """
-    cent = spark.table(f"{index}_centroids")
-    q = queries.select(
-        F.col("query_id").alias("vec_id"),
-        F.expr("cast(e as array<double>)").alias("e"),
-    )
-    probes = _assign_cells(q, cent, nprobe=nprobe).select(
-        F.col("vec_id").alias("query_id"), "cell"
-    )
-    # zero-norm guard, hoisted to the per-QUERY side (r14): a zero-norm
-    # query has undefined cosine against everything, so it honestly
-    # returns no neighbors — filtered ONCE here, on the tiny query
-    # frame, instead of try_divide + NULL-filter on every candidate row.
-    # Index-side zero norms cannot occur: ``{index}_vectors`` enforces
-    # nrm > 0 at build and ingest (operators/ann.py, streaming
-    # ann ingest), so the per-candidate division below is plain.
-    qn = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.sqrt(F.expr("aggregate(e, 0D, (acc, x) -> acc + x * x)")).alias("qnrm"),
-    ).where(F.col("qnrm") > 0)
-    vec = spark.table(f"{index}_vectors").select(
-        F.col("vec_id").alias("neighbor_id"), "cell", "e", "nrm"
-    )
-    # plain division is ANSI-safe here: qnrm > 0 was filtered above and
-    # nrm > 0 is the ``{index}_vectors`` invariant (enforced at build
-    # and ingest since r14 — one empty doc used to DIVIDE_BY_ZERO-kill
-    # every search probing its cell, review r13)
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qnrm") * F.col("nrm")),
-        6,
-    )
-    scored = (
-        probes.join(qn, "query_id")
-        .join(vec, "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-    )
+    q, probes = _catalog_probe(spark, index, queries, nprobe)
+    vec = neighbor_side(spark.table(f"{index}_vectors"), "cell")
     # no distinct needed: every vector lives in exactly one cell, so a
     # neighbor appears at most once per query even with nprobe > 1
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
+    pairs = (
+        probes.join(_catalog_queries(q), "query_id")
+        .join(vec, "cell")
+        .where(F.col("neighbor_id") != F.col("query_id"))
     )
+    return cosine_topk(pairs, k)
 
 
 def ann_index_search_pq(
@@ -583,112 +632,26 @@ def ann_index_search_pq(
     tables.  Only 8-small-int code rows move in the wide stage; exact
     vectors are fetched for shortlist rows alone.
     """
-    cent = spark.table(f"{index}_centroids")
-    q = queries.select(
-        F.col("query_id").alias("vec_id"),
-        F.expr("cast(e as array<double>)").alias("e"),
-    )
-    probes = _assign_cells(q, cent, nprobe=nprobe).select(
-        F.col("vec_id").alias("query_id"), F.col("cell").alias("qcell")
-    )
+    q, probes = _catalog_probe(spark, index, queries, nprobe)
+    probes = probes.withColumnRenamed("cell", "qcell")
     cb = spark.table(f"{index}_codebook")
+    enc, cb = pq_encoding(cb), cb.drop("enc")
     # residual-encoded index (enc column on the codebook): the LUT is
     # per (query, probe cell) — distances compare the query's
     # WITHIN-CELL residual against the residual codewords.  Exact for
     # the scanned cell: ||q - (c + r)||^2 = ||(q - c) - r||^2.
-    enc_row = cb.select("enc").first() if "enc" in cb.columns else None
-    residual = enc_row is not None and enc_row["enc"] == "residual"
-    cb = cb.drop("enc")
-    if residual:
-        cent_arr = cent.select(F.col("c_label").cast("bigint").alias("qcell"), "ce")
-        qres = (
-            probes.join(q.select(F.col("vec_id").alias("query_id"), "e"), "query_id")
-            .join(F.broadcast(cent_arr), "qcell")
-            .select(
-                "query_id",
-                "qcell",
-                F.expr("zip_with(e, ce, (x, y) -> x - y)").alias("e"),
-            )
+    if enc == "residual":
+        qres = residual(
+            probes.join(q.withColumnRenamed("vec_id", "query_id"), "query_id"),
+            spark.table(f"{index}_centroids"),
+            cell="qcell",
         )
-        qsubs = qres.select(
-            "query_id",
-            "qcell",
-            F.posexplode(
-                F.expr("transform(sequence(0, 7), s -> slice(e, s * 8 + 1, 8))")
-            ).alias("s", "sub"),
-        )
+        lut = pq_lut(pq_subspaces(qres, "query_id", "qcell"), cb, "query_id", "qcell")
     else:
-        qsubs = q.select(
-            F.col("vec_id").alias("query_id"),
-            F.posexplode(
-                F.expr("transform(sequence(0, 7), s -> slice(e, s * 8 + 1, 8))")
-            ).alias("s", "sub"),
-        )
-    sub_d2 = F.round(
-        F.expr(
-            "aggregate(zip_with(sub, cw, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
-        ),
-        8,
-    )
-    lut = qsubs.join(F.broadcast(cb), "s").select(
-        "query_id",
-        *(["qcell"] if residual else []),
-        F.col("s").alias("ls"),
-        F.col("c").alias("lc"),
-        sub_d2.cast("decimal(20,8)").alias("ld2"),
-    )
-    lut_in_cell = lut if residual else lut.join(probes, "query_id")
-    codes = spark.table(f"{index}_codes")
-    adc = (
-        codes.join(
-            F.broadcast(lut_in_cell),
-            (F.col("s") == F.col("ls"))
-            & (F.col("c") == F.col("lc"))
-            & (F.col("cell") == F.col("qcell")),
-        )
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("ld2").alias("ad2"))
-    )
-    w_adc = Window.partitionBy("query_id").orderBy("ad2", "neighbor_id")
-    cand = (
-        adc.withColumn("rk", F.row_number().over(w_adc))
-        .where(F.col("rk") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    vec = spark.table(f"{index}_vectors")
-    # zero-norm guard, hoisted to the per-QUERY side (r14): a zero-norm
-    # query has undefined cosine against everything, so it honestly
-    # returns no neighbors — filtered ONCE here, on the tiny query
-    # frame, instead of try_divide + NULL-filter on every candidate row.
-    # Index-side zero norms cannot occur: ``{index}_vectors`` enforces
-    # nrm > 0 at build and ingest (operators/ann.py, streaming
-    # ann ingest), so the per-candidate division below is plain.
-    qn = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.sqrt(F.expr("aggregate(e, 0D, (acc, x) -> acc + x * x)")).alias("qnrm"),
-    ).where(F.col("qnrm") > 0)
-    cn = vec.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm")
-    # plain division is ANSI-safe here: qnrm > 0 was filtered above and
-    # nrm > 0 is the ``{index}_vectors`` invariant (enforced at build
-    # and ingest since r14 — one empty doc used to DIVIDE_BY_ZERO-kill
-    # every search probing its cell, review r13)
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qnrm") * F.col("nrm")),
-        6,
-    )
-    scored = (
-        cand.join(qn, "query_id")
-        .join(cn, "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-    )
-    w_out = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w_out))
-        .where(F.col("rk") <= k)
-    )
+        qsubs = pq_subspaces(q, F.col("vec_id").alias("query_id"))
+        lut = pq_lut(qsubs, cb, "query_id").join(probes, "query_id")
+    cand = adc_shortlist(spark.table(f"{index}_codes"), lut, shortlist)
+    return _catalog_rerank(spark, index, q, cand, k)
 
 
 @register(
@@ -729,26 +692,11 @@ def q_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _normed(spark, sf_dir)
     cent = _centroid_arrays(n.select("label", "e"))
     cells = _assign_cells(n, cent)
-    q = (
-        cells.where(F.col("vec_id") < 10)
-        .join(n, "vec_id")
-        .select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn"), "cell")
+    q = query_side(cells.where(F.col("vec_id") < 10).join(n, "vec_id"), "cell")
+    c = neighbor_side(cells.join(n, "vec_id"), "cell")
+    return cosine_topk(
+        q.join(c, "cell").where(F.col("neighbor_id") != F.col("query_id")), 3
     )
-    c = cells.join(n, "vec_id").select(
-        F.col("vec_id").alias("neighbor_id"), "e", "nrm", "cell"
-    )
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qn") * F.col("nrm")),
-        6,
-    )
-    scored = (
-        q.join(c, "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= 3)
 
 
 # PQ building blocks shared by q_ann_pq_adc_topk and q_ann_ivfpq_topk:
@@ -780,52 +728,97 @@ lut AS (
 )"""
 
 
-def _pq_frames(n: DataFrame, head: DataFrame | None = None) -> tuple[DataFrame, DataFrame]:
+# 8 subspaces x 8 dims of a 64-dim vector ``e``
+_PQ_SPLIT = "transform(sequence(0, 7), s -> slice(e, s * 8 + 1, 8))"
+
+
+def pq_subspaces(frame: DataFrame, *keep) -> DataFrame:
+    """(*keep, s, sub): one row per PQ subspace of ``e``."""
+    return frame.select(*keep, F.posexplode(F.expr(_PQ_SPLIT)).alias("s", "sub"))
+
+
+def pq_encode(subs: DataFrame, cb: DataFrame, *keep: str) -> DataFrame:
+    """PQ encode stage: (*keep, s, c) — each subspace's nearest codeword
+    of the broadcast codebook ``cb`` (s, c, cw).  min(struct(d2, c)) is
+    the argmin with the (rounded d2, c) tie-break, no window."""
+    return (
+        subs.join(F.broadcast(cb), "s")
+        .select(*keep, "s", "c", _d2("sub", "cw").alias("d2"))
+        .groupBy(*keep, "s")
+        .agg(F.min(F.struct("d2", "c")).alias("m"))
+        .select(*keep, "s", F.col("m.c").alias("c"))
+    )
+
+
+def pq_lut(qsubs: DataFrame, cb: DataFrame, *keep) -> DataFrame:
+    """Per-query ADC lookup table (*keep, ls, lc, ld2): every codeword's
+    rounded subspace distance to the query, DECIMAL so the ADC sum is
+    order-independent."""
+    return qsubs.join(F.broadcast(cb), "s").select(
+        *keep,
+        F.col("s").alias("ls"),
+        F.col("c").alias("lc"),
+        _d2("sub", "cw").cast("decimal(20,8)").alias("ld2"),
+    )
+
+
+def residual(frame: DataFrame, cent: DataFrame, cell: str = "cell") -> DataFrame:
+    """``frame`` with ``e`` replaced by the within-cell residual
+    e - centroid(``cell``): broadcast the (tiny) centroid table (c_label,
+    ce), exact double subtraction."""
+    keep = [c for c in frame.columns if c != "e"]
+    return frame.join(F.broadcast(cent), F.col(cell) == F.col("c_label")).select(
+        *keep, F.expr("zip_with(e, ce, (x, y) -> x - y)").alias("e")
+    )
+
+
+def adc_shortlist(codes: DataFrame, lut: DataFrame, n: int) -> DataFrame:
+    """ADC scan + shortlist: PQ code rows (vec_id, s, c[, cell]) summed
+    against the broadcast LUT; a LUT carrying ``qcell`` restricts each
+    query to the codes of its probed cell."""
+    on = (F.col("s") == F.col("ls")) & (F.col("c") == F.col("lc"))
+    if "qcell" in lut.columns:
+        on = on & (F.col("cell") == F.col("qcell"))
+    adc = (
+        codes.join(F.broadcast(lut), on)
+        .where(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+        .agg(F.sum("ld2").alias("ad2"))
+    )
+    return shortlist_by(adc, n, "ad2")
+
+
+def pq_encoding(cb: DataFrame) -> str:
+    """The encoding a stored codebook was built with ("vector" for
+    pre-residual indexes that have no enc column)."""
+    if "enc" not in cb.columns:
+        return "vector"
+    row = cb.select("enc").first()
+    return row["enc"] if row is not None else "vector"
+
+
+def _pq_frames(n: DataFrame, head: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(codes, lut) for the shared PQ design over normed vectors ``n``
     — the DataFrame twin of ``_SQL_PQ``.
 
-    ``head``, when given, is a LocalRelation holding the vec_id < 16
-    rows of ``n`` (same columns) — the codebook and per-query LUT then
-    derive from local lineage, so their broadcast builds stop
-    re-scanning (and racing the cache of) the corpus frame.  The rows
-    are by construction the same, so codes/lut values are unchanged."""
-    def subs_of(frame: DataFrame) -> DataFrame:
-        return frame.select(
-            "vec_id",
-            F.posexplode(
-                F.expr("transform(sequence(0, 7), s -> slice(e, s * 8 + 1, 8))")
-            ).alias("s", "sub"),
-        )
-
-    subs = subs_of(n)
-    hsubs = subs_of(head) if head is not None else subs
+    ``head`` is a LocalRelation holding the vec_id < 16 rows of ``n``
+    (same columns) — the codebook and per-query LUT derive from local
+    lineage, so their broadcast builds never re-scan (or race the cache
+    of) the corpus frame."""
+    hsubs = pq_subspaces(head, "vec_id")
     cb = hsubs.where(F.col("vec_id") < 16).select(
         "s", F.col("vec_id").alias("c"), F.col("sub").alias("cw")
     )
-    sub_d2 = F.round(
-        F.expr(
-            "aggregate(zip_with(sub, cw, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
-        ),
-        8,
-    )
-    enc_d = subs.join(F.broadcast(cb), "s").select("vec_id", "s", "c", sub_d2.alias("d2"))
-    # min(struct(d2, c)) = argmin with the (d2, c) tie-break, no window
-    codes = (
-        enc_d.groupBy("vec_id", "s")
-        .agg(F.min(F.struct("d2", "c")).alias("m"))
-        .select("vec_id", "s", F.col("m.c").alias("c"))
-    )
-    lut = (
-        hsubs.where(F.col("vec_id") < 10)
-        .join(F.broadcast(cb), "s")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "s",
-            "c",
-            sub_d2.cast("decimal(20,8)").alias("d2"),
-        )
-    )
+    codes = pq_encode(pq_subspaces(n, "vec_id"), cb, "vec_id")
+    lut = pq_lut(hsubs.where(F.col("vec_id") < 10), cb, F.col("vec_id").alias("query_id"))
     return codes, lut
+
+
+def _head_rerank(cand: DataFrame, head: DataFrame, n: DataFrame) -> DataFrame:
+    """Exact top-5 of a registry PQ shortlist: the query vectors come
+    from the local head rows, the neighbors from the corpus frame."""
+    query = query_side(head.where(F.col("vec_id") < 10))
+    return exact_rerank(cand, query, neighbor_side(n), 5)
 
 
 @register(
@@ -882,34 +875,8 @@ def q_ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = persist_tracked(_normed(spark, sf_dir))
     head = _as_local(n.where(F.col("vec_id") < 16).select("vec_id", "e", "nrm"))
     codes, lut = _pq_frames(n, head=head)
-    adc = (
-        codes.join(F.broadcast(lut), ["s", "c"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("d2").alias("ad2"))
-    )
-    w_adc = Window.partitionBy("query_id").orderBy("ad2", "neighbor_id")
-    cand = (
-        adc.withColumn("rk", F.row_number().over(w_adc))
-        .where(F.col("rk") <= 20)
-        .select("query_id", "neighbor_id")
-    )
-    qn = head.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
-    cn = n.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm")
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qn") * F.col("nrm")),
-        6,
-    )
-    scored = (
-        cand.join(qn, "query_id")
-        .join(cn, "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= 5)
+    cand = adc_shortlist(codes, lut, 20)
+    return _head_rerank(cand, head, n)
 
 
 @register(
@@ -979,77 +946,19 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = persist_tracked(_normed(spark, sf_dir))
     head = _as_local(n.where(F.col("vec_id") < 16).select("vec_id", "e", "nrm"))
     cent = _as_local(_centroid_arrays(n.select("label", "e")))
-    d2 = F.round(
-        F.expr(
-            "aggregate(zip_with(e, ce, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
-        ),
-        8,
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy("d2", "c_label")
-
-    def assign(frame: DataFrame) -> DataFrame:
-        return (
-            frame.crossJoin(F.broadcast(cent))
-            .select("vec_id", "c_label", d2.alias("d2"))
-            .withColumn("rk", F.row_number().over(w_assign))
-            .where(F.col("rk") == 1)
-            .select("vec_id", F.col("c_label").alias("cell"))
-        )
-
-    cells = assign(n)  # corpus arm: consumed once by the ADC join
     codes, lut = _pq_frames(n, head=head)
     # query cells from the SAME argmin over the local head rows —
     # per-vector assignment is independent, so filtering before the
     # window equals filtering after it
-    qcells = assign(head.where(F.col("vec_id") < 10)).select(
+    qcells = _assign_cells(head.where(F.col("vec_id") < 10), cent).select(
         F.col("vec_id").alias("query_id"), F.col("cell").alias("qcell")
     )
-    # rename the LUT's join keys so the three-way condition stays
-    # unambiguous against the codes side
-    lut_in_cell = (
-        lut.join(F.broadcast(qcells), "query_id")
-        .select(
-            "query_id",
-            F.col("s").alias("ls"),
-            F.col("c").alias("lc"),
-            F.col("d2").alias("ld2"),
-            "qcell",
-        )
+    cand = adc_shortlist(
+        codes.join(_assign_cells(n, cent), "vec_id"),  # corpus arm
+        lut.join(F.broadcast(qcells), "query_id"),
+        20,
     )
-    adc = (
-        codes.join(cells, "vec_id")
-        .join(
-            F.broadcast(lut_in_cell),
-            (F.col("s") == F.col("ls"))
-            & (F.col("c") == F.col("lc"))
-            & (F.col("cell") == F.col("qcell")),
-        )
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("ld2").alias("ad2"))
-    )
-    w_adc = Window.partitionBy("query_id").orderBy("ad2", "neighbor_id")
-    cand = (
-        adc.withColumn("rk", F.row_number().over(w_adc))
-        .where(F.col("rk") <= 20)
-        .select("query_id", "neighbor_id")
-    )
-    qn = head.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
-    cn = n.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm")
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qn") * F.col("nrm")),
-        6,
-    )
-    scored = (
-        cand.join(qn, "query_id")
-        .join(cn, "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= 5)
+    return _head_rerank(cand, head, n)
 
 
 @register(
@@ -1162,17 +1071,7 @@ def q_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_label").alias("cell"), F.col("ce").alias("ce1")
     )
     members = cells.groupBy("cell").agg(F.count(F.lit(1)).alias("n_members"))
-    shift = F.round(
-        F.sqrt(
-            F.round(
-                F.expr(
-                    "aggregate(zip_with(ce1, ce, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
-                ),
-                8,
-            )
-        ),
-        6,
-    )
+    shift = F.round(F.sqrt(_d2("ce1", "ce")), 6)
     return (
         members.join(cent1, "cell")
         .join(cent0, F.col("cell") == F.col("c_label"))
@@ -1345,104 +1244,24 @@ def q_ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = persist_tracked(_normed(spark, sf_dir))
     head = _as_local(n.where(F.col("vec_id") < 16).select("vec_id", "e", "nrm"))
     cent = _as_local(_centroid_arrays(n.select("label", "e")))
-    d2 = F.round(
-        F.expr(
-            "aggregate(zip_with(e, ce, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
-        ),
-        8,
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy("d2", "c_label")
 
-    def assign(frame: DataFrame) -> DataFrame:
-        return (
-            frame.crossJoin(F.broadcast(cent))
-            .select("vec_id", "c_label", d2.alias("d2"))
-            .withColumn("rk", F.row_number().over(w_assign))
-            .where(F.col("rk") == 1)
-            .select("vec_id", F.col("c_label").alias("cell"))
-        )
+    def residual_subs(frame: DataFrame) -> DataFrame:
+        cells = frame.join(_assign_cells(frame, cent), "vec_id")
+        return pq_subspaces(residual(cells, cent), "vec_id", "cell")
 
-    def residual_subs(frame: DataFrame, cells_of: DataFrame) -> DataFrame:
-        res = (
-            frame.join(cells_of, "vec_id")
-            .join(F.broadcast(cent), F.col("cell") == F.col("c_label"))
-            .select(
-                "vec_id",
-                "cell",
-                F.expr("zip_with(e, ce, (x, y) -> x - y)").alias("re"),
-            )
-        )
-        return res.select(
-            "vec_id",
-            "cell",
-            F.posexplode(
-                F.expr("transform(sequence(0, 7), s -> slice(re, s * 8 + 1, 8))")
-            ).alias("s", "sub"),
-        )
-
-    rsubs = residual_subs(n, assign(n))  # corpus arm
-    hsubs = residual_subs(head, assign(head))  # local twin, 16 rows
+    rsubs = residual_subs(n)  # corpus arm
+    hsubs = residual_subs(head)  # local twin, 16 rows
     rcb = hsubs.where(F.col("vec_id") < 16).select(
         "s", F.col("vec_id").alias("c"), F.col("sub").alias("cw")
     )
-    sub_d2 = F.round(
-        F.expr(
-            "aggregate(zip_with(sub, cw, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
-        ),
-        8,
+    lut = pq_lut(
+        hsubs.where(F.col("vec_id") < 10),
+        rcb,
+        F.col("vec_id").alias("query_id"),
+        F.col("cell").alias("qcell"),
     )
-    enc_d = rsubs.join(F.broadcast(rcb), "s").select(
-        "vec_id", "cell", "s", "c", sub_d2.alias("d2")
-    )
-    codes = (
-        enc_d.groupBy("vec_id", "cell", "s")
-        .agg(F.min(F.struct("d2", "c")).alias("m"))
-        .select("vec_id", "cell", "s", F.col("m.c").alias("c"))
-    )
-    lut_in_cell = (
-        hsubs.where(F.col("vec_id") < 10)
-        .join(F.broadcast(rcb), "s")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("cell").alias("qcell"),
-            F.col("s").alias("ls"),
-            F.col("c").alias("lc"),
-            sub_d2.cast("decimal(20,8)").alias("ld2"),
-        )
-    )
-    adc = (
-        codes.join(
-            F.broadcast(lut_in_cell),
-            (F.col("s") == F.col("ls"))
-            & (F.col("c") == F.col("lc"))
-            & (F.col("cell") == F.col("qcell")),
-        )
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("ld2").alias("ad2"))
-    )
-    w_adc = Window.partitionBy("query_id").orderBy("ad2", "neighbor_id")
-    cand = (
-        adc.withColumn("rk", F.row_number().over(w_adc))
-        .where(F.col("rk") <= 20)
-        .select("query_id", "neighbor_id")
-    )
-    qn = head.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
-    cn = n.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm")
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qn") * F.col("nrm")),
-        6,
-    )
-    scored = (
-        cand.join(qn, "query_id")
-        .join(cn, "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= 5)
+    cand = adc_shortlist(pq_encode(rsubs, rcb, "vec_id", "cell"), lut, 20)
+    return _head_rerank(cand, head, n)
 
 
 # --- SQ8 symmetric search (the scalar-quantization ANN path) ----------
@@ -1477,17 +1296,112 @@ def sq8_codes_col(e: str = "e", dims: int | None = None):
     )
 
 
+_BQ_WORDS = ((1, 32), (33, 64))  # two 32-bit words per 64-dim vector
+
+
+def _bq_pack_expr(code_col: str, lo: int, hi: int) -> str:
+    """BIGINT word packing bits lo..hi of an SQ8 code array: bit j set
+    iff code >= 128 (the grid midpoint), laid out MSB-first so both
+    engines agree on the word value."""
+    return (
+        f"aggregate(sequence({lo}, {hi}), cast(0 as bigint), (acc, j) -> "
+        f"acc + case when element_at({code_col}, j) >= 128 "
+        f"then shiftleft(cast(1 as bigint), {hi} - j) else cast(0 as bigint) end)"
+    )
+
+
+def _bq_pack_sql(code_col: str, lo: int, hi: int) -> str:
+    return (
+        f"CAST(list_sum(list_transform(generate_series({lo}, {hi}), j -> "
+        f"CASE WHEN {code_col}[j] >= 128 THEN (CAST(1 AS BIGINT) << ({hi} - j)) "
+        f"ELSE 0 END)) AS BIGINT)"
+    )
+
+
+def quantize(
+    frame: DataFrame,
+    grid: DataFrame,
+    *keep: str,
+    out: tuple[str, ...] = ("c",),
+    dims: int | None = None,
+) -> DataFrame:
+    """Quantize stage: (*keep, *out) for the vectors ``e`` of ``frame``
+    against the 1-row ``grid`` (sq8_range_row) — ``c`` is the SQ8 code
+    array (64 bytes/vector), ``w1``/``w2`` the packed sign words of the
+    binary tier (16 bytes/vector; bit j = code j >= 128, the grid
+    midpoint, so the words are the codes' top bits and carry no FP
+    surface of their own).  A row-local fold against the broadcast grid:
+    encoding never shuffles."""
+    coded = frame.crossJoin(F.broadcast(grid)).select(
+        *keep, sq8_codes_col("e", dims).alias("c")
+    )
+    cols = {"c": F.col("c")}
+    for i, (lo, hi) in enumerate(_BQ_WORDS):
+        cols[f"w{i + 1}"] = F.expr(_bq_pack_expr("c", lo, hi))
+    return coded.select(*keep, *(cols[o].alias(o) for o in out))
+
+
+def binary_codes_frame(emb: DataFrame, rng: DataFrame | None = None) -> DataFrame:
+    """(vec_id, w1, w2): 64 sign bits against the SQ8 grid midpoint,
+    packed into two BIGINT words — 16 bytes per vector, a 16x
+    compression under float32.
+
+    ``rng``, when given, is a pre-trained 1-row grid (sq8_range_row of
+    the TRAINING corpus) — callers that binarise a query slice against
+    the corpus grid must pass it, or the slice would train its own."""
+    if rng is None:
+        rng = sq8_range_row(emb)
+    return quantize(emb, rng, "vec_id", out=("w1", "w2"))
+
+
 _SQ8_D2 = (
     "cast(aggregate(zip_with(qc, cc, (a, b) -> (a - b) * (a - b)), "
     "cast(0 as bigint), (acc, v) -> acc + v) as bigint)"
 )
 
+_BQ_HAM = (
+    "cast(bit_count(qw1 ^ w1) + bit_count(qw2 ^ w2) as int)"
+)
 
-@register(
-    "q_ann_sq8_topk",
-    oracle=f"""
-WITH {_SQL_EMB},
-comp AS (
+
+def sq8_rerank(cand: DataFrame, qcodes: DataFrame, codes: DataFrame, n: int) -> DataFrame:
+    """Cascade tier 2: shortlist pairs rescored by the symmetric integer
+    SQ8 distance between query codes (query_id, qc) and corpus codes
+    (neighbor_id, cc), narrowed to ``n`` per query."""
+    scored = (
+        cand.join(qcodes, "query_id")
+        .join(codes, "neighbor_id")
+        .select("query_id", "neighbor_id", F.expr(_SQ8_D2).alias("d2"))
+    )
+    return shortlist_by(scored, n, "d2")
+
+
+def _hamming_scan(qwords: DataFrame, words: DataFrame) -> DataFrame:
+    """Registry binary scan: (query_id, neighbor_id, ham) of every
+    standard query's packed words against every other vector's."""
+    q = qwords.where(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("w1").alias("qw1"),
+        F.col("w2").alias("qw2"),
+    )
+    n = words.withColumnRenamed("vec_id", "neighbor_id")
+    return _all_pairs(q, n).select("query_id", "neighbor_id", F.expr(_BQ_HAM).alias("ham"))
+
+
+def _quantized_queries(
+    spark: SparkSession, index: str, q: DataFrame, out: tuple[str, ...]
+) -> DataFrame:
+    """(query_id, q<out>...): catalog queries quantized on the index's
+    frozen ``{index}_sq8grid``."""
+    coded = quantize(q, spark.table(f"{index}_sq8grid"), "vec_id", out=out)
+    return coded.select(
+        F.col("vec_id").alias("query_id"), *(F.col(o).alias(f"q{o}") for o in out)
+    )
+
+
+# Oracle CTEs shared by the SQ8 and binary queries: the corpus-trained
+# grid, the 0..255 codes, and (_SQL_BQ) the packed sign words
+_SQL_SQ8 = """comp AS (
   SELECT vec_id, i, e[i] AS x FROM emb, (SELECT unnest(generate_series(1, 64)) AS i)
 ),
 dim_range AS (SELECT i, MIN(x) AS lo, MAX(x) AS hi FROM comp GROUP BY i),
@@ -1501,7 +1415,19 @@ codes AS (
                 ELSE CAST(ROUND((e[j] - r.lo_a[j]) / (r.hi_a[j] - r.lo_a[j]) * 255)
                           AS BIGINT) END) AS c
   FROM emb, rngarr r
-),
+)"""
+_SQL_BQ = f"""{_SQL_SQ8},
+words AS (
+  SELECT vec_id, {_bq_pack_sql("c", 1, 32)} AS w1, {_bq_pack_sql("c", 33, 64)} AS w2
+  FROM codes
+)"""
+
+
+@register(
+    "q_ann_sq8_topk",
+    oracle=f"""
+WITH {_SQL_EMB},
+{_SQL_SQ8},
 scored AS (
   SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
          CAST(list_sum(list_transform(generate_series(1, 64),
@@ -1538,19 +1464,15 @@ def q_ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = T(spark, sf_dir, "embeddings").select(
         "vec_id", F.expr("cast(embedding as array<double>)").alias("e")
     )
-    rng = sq8_range_row(emb)
-    codes = emb.crossJoin(F.broadcast(rng)).select(
-        "vec_id", sq8_codes_col().alias("c")
-    )
+    codes = quantize(emb, sq8_range_row(emb), "vec_id")
     q = codes.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("c").alias("qc")
     )
     n = codes.select(F.col("vec_id").alias("neighbor_id"), F.col("c").alias("cc"))
-    scored = q.join(n, F.col("neighbor_id") != F.col("query_id")).select(
+    scored = _all_pairs(q, n).select(
         "query_id", "neighbor_id", F.expr(_SQ8_D2).alias("d2")
     )
-    w = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= 5)
+    return top_k(scored, 5, "d2", "neighbor_id")
 
 
 def ann_index_search_sq8(
@@ -1575,120 +1497,16 @@ def ann_index_search_sq8(
     cell, so the wide scan reads nprobe/n_cells of a quarter-sized
     table in place; only query rows and the shortlist move.
     """
-    cent = spark.table(f"{index}_centroids")
-    q = queries.select(
-        F.col("query_id").alias("vec_id"),
-        F.expr("cast(e as array<double>)").alias("e"),
-    )
-    probes = _assign_cells(q, cent, nprobe=nprobe).select(
-        F.col("vec_id").alias("query_id"), "cell"
-    )
-    grid = spark.table(f"{index}_sq8grid")
-    qcodes = (
-        q.crossJoin(F.broadcast(grid))
-        .select(F.col("vec_id").alias("query_id"), sq8_codes_col().alias("qc"))
-        .join(probes, "query_id")
-    )
+    q, probes = _catalog_probe(spark, index, queries, nprobe)
+    qcodes = _quantized_queries(spark, index, q, ("c",)).join(probes, "query_id")
     codes = spark.table(f"{index}_sq8codes").select(
         F.col("vec_id").alias("neighbor_id"), "cell", F.col("c").alias("cc")
     )
-    scored = (
-        codes.join(F.broadcast(qcodes), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", F.expr(_SQ8_D2).alias("d2"))
-    )
-    w_d2 = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    cand = (
-        scored.withColumn("rk", F.row_number().over(w_d2))
-        .where(F.col("rk") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    vec = spark.table(f"{index}_vectors")
-    # zero-norm guard, hoisted to the per-QUERY side (r14): a zero-norm
-    # query has undefined cosine against everything, so it honestly
-    # returns no neighbors — filtered ONCE here, on the tiny query
-    # frame, instead of try_divide + NULL-filter on every candidate row.
-    # Index-side zero norms cannot occur: ``{index}_vectors`` enforces
-    # nrm > 0 at build and ingest (operators/ann.py, streaming
-    # ann ingest), so the per-candidate division below is plain.
-    qn = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.sqrt(F.expr("aggregate(e, 0D, (acc, x) -> acc + x * x)")).alias("qnrm"),
-    ).where(F.col("qnrm") > 0)
-    cn = vec.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm")
-    # plain division is ANSI-safe here: qnrm > 0 was filtered above and
-    # nrm > 0 is the ``{index}_vectors`` invariant (enforced at build
-    # and ingest since r14 — one empty doc used to DIVIDE_BY_ZERO-kill
-    # every search probing its cell, review r13)
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qnrm") * F.col("nrm")),
-        6,
-    )
-    scored_exact = (
-        cand.join(qn, "query_id")
-        .join(cn, "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-    )
-    w_out = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored_exact.withColumn("rk", F.row_number().over(w_out))
-        .where(F.col("rk") <= k)
-    )
+    cand = _cell_scan(codes, qcodes, _SQ8_D2, shortlist)
+    return _catalog_rerank(spark, index, q, cand, k)
 
 
 # --- Binary (1-bit) quantization + packed Hamming search ---------------
-
-_BQ_WORDS = ((1, 32), (33, 64))  # two 32-bit words per 64-dim vector
-
-
-def _bq_pack_expr(code_col: str, lo: int, hi: int) -> str:
-    """BIGINT word packing bits lo..hi of an SQ8 code array: bit j set
-    iff code >= 128 (the grid midpoint), laid out MSB-first so both
-    engines agree on the word value."""
-    return (
-        f"aggregate(sequence({lo}, {hi}), cast(0 as bigint), (acc, j) -> "
-        f"acc + case when element_at({code_col}, j) >= 128 "
-        f"then shiftleft(cast(1 as bigint), {hi} - j) else cast(0 as bigint) end)"
-    )
-
-
-def _bq_pack_sql(code_col: str, lo: int, hi: int) -> str:
-    return (
-        f"CAST(list_sum(list_transform(generate_series({lo}, {hi}), j -> "
-        f"CASE WHEN {code_col}[j] >= 128 THEN (CAST(1 AS BIGINT) << ({hi} - j)) "
-        f"ELSE 0 END)) AS BIGINT)"
-    )
-
-
-def binary_codes_frame(emb: DataFrame, rng: DataFrame | None = None) -> DataFrame:
-    """(vec_id, w1, w2): 64 sign bits against the SQ8 grid midpoint,
-    packed into two BIGINT words — 16 bytes per vector, a 16x
-    compression under float32.  Bits derive from the integer SQ8 codes
-    (code >= 128), so the binarisation carries no FP surface of its
-    own beyond the shared grid assignment.
-
-    ``rng``, when given, is a pre-trained 1-row grid (sq8_range_row of
-    the TRAINING corpus) — callers that binarise a query slice against
-    the corpus grid must pass it, or the slice would train its own."""
-    if rng is None:
-        rng = sq8_range_row(emb)
-    codes = emb.crossJoin(F.broadcast(rng)).select(
-        "vec_id", sq8_codes_col().alias("c")
-    )
-    return codes.select(
-        "vec_id",
-        *[
-            F.expr(_bq_pack_expr("c", lo, hi)).alias(f"w{i + 1}")
-            for i, (lo, hi) in enumerate(_BQ_WORDS)
-        ],
-    )
-
-
-_BQ_HAM = (
-    "cast(bit_count(qw1 ^ w1) + bit_count(qw2 ^ w2) as int)"
-)
 
 _BQ_SHORTLIST = 20
 _BQ_K = 5
@@ -1698,25 +1516,7 @@ _BQ_K = 5
     "q_ann_binary_hamming",
     oracle=f"""
 WITH {_SQL_EMB}, {_SQL_NORMED},
-comp AS (
-  SELECT vec_id, i, e[i] AS x FROM emb, (SELECT unnest(generate_series(1, 64)) AS i)
-),
-dim_range AS (SELECT i, MIN(x) AS lo, MAX(x) AS hi FROM comp GROUP BY i),
-rngarr AS (
-  SELECT list(lo ORDER BY i) AS lo_a, list(hi ORDER BY i) AS hi_a FROM dim_range
-),
-codes AS (
-  SELECT vec_id,
-         list_transform(generate_series(1, 64), j ->
-           CASE WHEN r.hi_a[j] = r.lo_a[j] THEN CAST(0 AS BIGINT)
-                ELSE CAST(ROUND((e[j] - r.lo_a[j]) / (r.hi_a[j] - r.lo_a[j]) * 255)
-                          AS BIGINT) END) AS c
-  FROM emb, rngarr r
-),
-words AS (
-  SELECT vec_id, {_bq_pack_sql("c", 1, 32)} AS w1, {_bq_pack_sql("c", 33, 64)} AS w2
-  FROM codes
-),
+{_SQL_BQ},
 ham AS (
   SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
          CAST(bit_count(xor(q.w1, n.w1)) + bit_count(xor(q.w2, n.w2)) AS INT) AS ham
@@ -1770,39 +1570,14 @@ def q_ann_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     # duplicated broadcast evaluation to remove — the query words share
     # the corpus `words` frame — so the two collect jobs bought nothing
     words = binary_codes_frame(emb)
-    q = words.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("w1").alias("qw1"),
-        F.col("w2").alias("qw2"),
-    )
-    n = words.select(F.col("vec_id").alias("neighbor_id"), "w1", "w2")
-    ham = q.join(n, F.col("neighbor_id") != F.col("query_id")).select(
-        "query_id", "neighbor_id", F.expr(_BQ_HAM).alias("ham")
-    )
-    w_h = Window.partitionBy("query_id").orderBy("ham", "neighbor_id")
-    shortlist = (
-        ham.withColumn("rkh", F.row_number().over(w_h))
-        .where(F.col("rkh") <= _BQ_SHORTLIST)
-        .select("query_id", "neighbor_id", "ham")
-    )
+    cand = top_k(_hamming_scan(words, words), _BQ_SHORTLIST, "ham", "neighbor_id")
     nf = _normed(spark, sf_dir)
-    qn = nf.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
-    cn = nf.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm")
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qn") * F.col("nrm")),
-        6,
-    )
-    rerank = (
-        shortlist.join(qn, "query_id")
-        .join(cn, "neighbor_id")
-        .select("query_id", "neighbor_id", "ham", cos.alias("cos"))
-    )
-    w_out = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return rerank.withColumn("rk", F.row_number().over(w_out)).where(
-        F.col("rk") <= _BQ_K
+    return exact_rerank(
+        cand.select("query_id", "neighbor_id", "ham"),
+        query_side(nf.where(F.col("vec_id") < 10)),
+        neighbor_side(nf),
+        _BQ_K,
+        "ham",
     )
 
 
@@ -1863,50 +1638,39 @@ def q_ann_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantized shortlist, then rerank exact, without changing this
     output contract."""
     nf = _normed(spark, sf_dir)
-    a = nf.where(F.col("vec_id") < _TRIP_ANCHORS).select(
-        F.col("vec_id").alias("anchor_id"),
-        F.col("label").alias("label"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    c = nf.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("c_label"),
-        "e",
-        "nrm",
-    )
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qn") * F.col("nrm")),
-        6,
-    )
+    a = query_side(nf.where(F.col("vec_id") < _TRIP_ANCHORS), "label")
+    c = neighbor_side(nf, F.col("label").alias("c_label"))
     scored = persist_tracked(
-        a.join(c, F.col("neighbor_id") != F.col("anchor_id")).select(
-            "anchor_id", "label", "neighbor_id", "c_label", cos.alias("cos")
-        )
-    )
-    w_pos = Window.partitionBy("anchor_id").orderBy("cos", "neighbor_id")
-    pos = (
-        scored.where(F.col("c_label") == F.col("label"))
-        .withColumn("rk", F.row_number().over(w_pos))
-        .where(F.col("rk") == 1)
-        .select(
-            "anchor_id",
+        _all_pairs(a, c).select(
+            F.col("query_id").alias("anchor_id"),
             "label",
-            F.col("neighbor_id").alias("pos_id"),
-            F.col("cos").alias("cos_pos"),
+            "neighbor_id",
+            "c_label",
+            _cos().alias("cos"),
         )
     )
-    w_neg = Window.partitionBy("anchor_id").orderBy(F.desc("cos"), "neighbor_id")
-    neg = (
-        scored.where(F.col("c_label") != F.col("label"))
-        .withColumn("rk", F.row_number().over(w_neg))
-        .where(F.col("rk") == 1)
-        .select(
-            "anchor_id",
-            F.col("neighbor_id").alias("neg_id"),
-            F.col("cos").alias("cos_neg"),
-        )
+    pos = top_k(
+        scored.where(F.col("c_label") == F.col("label")),
+        1,
+        "cos",
+        "neighbor_id",
+        by="anchor_id",
+    ).select(
+        "anchor_id",
+        "label",
+        F.col("neighbor_id").alias("pos_id"),
+        F.col("cos").alias("cos_pos"),
+    )
+    neg = top_k(
+        scored.where(F.col("c_label") != F.col("label")),
+        1,
+        F.desc("cos"),
+        "neighbor_id",
+        by="anchor_id",
+    ).select(
+        "anchor_id",
+        F.col("neighbor_id").alias("neg_id"),
+        F.col("cos").alias("cos_neg"),
     )
     return pos.join(neg, "anchor_id").select(
         "anchor_id",
@@ -1944,79 +1708,30 @@ def ann_index_search_binary(
     per-pair work is two XOR+popcounts — the cheapest scan of the
     index family (the coarse tier under SQ8 when even 1 byte/dim is
     too much memory)."""
-    cent = spark.table(f"{index}_centroids")
-    q = queries.select(
-        F.col("query_id").alias("vec_id"),
-        F.expr("cast(e as array<double>)").alias("e"),
-    )
-    probes = _assign_cells(q, cent, nprobe=nprobe).select(
-        F.col("vec_id").alias("query_id"), "cell"
-    )
-    grid = spark.table(f"{index}_sq8grid")
-    qwords = (
-        q.crossJoin(F.broadcast(grid))
-        .select(F.col("vec_id").alias("query_id"), sq8_codes_col().alias("c"))
-        .select(
-            "query_id",
-            F.expr(_bq_pack_expr("c", *_BQ_WORDS[0])).alias("qw1"),
-            F.expr(_bq_pack_expr("c", *_BQ_WORDS[1])).alias("qw2"),
-        )
-        .join(probes, "query_id")
-    )
-    words = spark.table(f"{index}_binwords").select(
-        F.col("vec_id").alias("neighbor_id"), "cell", "w1", "w2"
-    )
-    scored = (
-        words.join(F.broadcast(qwords), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", F.expr(_BQ_HAM).alias("ham"))
-    )
-    w_h = Window.partitionBy("query_id").orderBy("ham", "neighbor_id")
-    cand = (
-        scored.withColumn("rk", F.row_number().over(w_h))
-        .where(F.col("rk") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    vec = spark.table(f"{index}_vectors")
-    # zero-norm guard, hoisted to the per-QUERY side (r14): a zero-norm
-    # query has undefined cosine against everything, so it honestly
-    # returns no neighbors — filtered ONCE here, on the tiny query
-    # frame, instead of try_divide + NULL-filter on every candidate row.
-    # Index-side zero norms cannot occur: ``{index}_vectors`` enforces
-    # nrm > 0 at build and ingest (operators/ann.py, streaming
-    # ann ingest), so the per-candidate division below is plain.
-    qn = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.sqrt(F.expr("aggregate(e, 0D, (acc, x) -> acc + x * x)")).alias("qnrm"),
-    ).where(F.col("qnrm") > 0)
-    cn = vec.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm")
-    # plain division is ANSI-safe here: qnrm > 0 was filtered above and
-    # nrm > 0 is the ``{index}_vectors`` invariant (enforced at build
-    # and ingest since r14 — one empty doc used to DIVIDE_BY_ZERO-kill
-    # every search probing its cell, review r13)
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qnrm") * F.col("nrm")),
-        6,
-    )
-    scored_exact = (
-        cand.join(qn, "query_id")
-        .join(cn, "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-    )
-    w_out = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
+    q, probes = _catalog_probe(spark, index, queries, nprobe)
+    qwords = _quantized_queries(spark, index, q, ("w1", "w2")).join(probes, "query_id")
+    words = spark.table(f"{index}_binwords").withColumnRenamed("vec_id", "neighbor_id")
+    cand = _cell_scan(words, qwords, _BQ_HAM, shortlist)
+    return _catalog_rerank(spark, index, q, cand, k)
+
+
+def _recall(exact: DataFrame, cand: DataFrame, k: int) -> DataFrame:
+    """(query_id, n_hit, recall_ppm): how many of each query's exact
+    top-``k`` (query_id, neighbor_id) pairs survive into ``cand``."""
+    hits = cand.select("query_id", "neighbor_id", F.lit(1).alias("_in"))
     return (
-        scored_exact.withColumn("rk", F.row_number().over(w_out))
-        .where(F.col("rk") <= k)
+        exact.join(hits, ["query_id", "neighbor_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            F.sum(F.coalesce("_in", F.lit(0))).cast("bigint").alias("n_hit"),
+            F.expr(
+                f"cast((sum(coalesce(_in, 0)) * 1000000) div {k} as bigint)"
+            ).alias("recall_ppm"),
+        )
     )
 
 
-@register(
-    "q_ann_binary_recall",
-    oracle=f"""
-WITH {_SQL_EMB}, {_SQL_NORMED},
-exact AS (
+_SQL_EXACT5 = """exact AS (
   SELECT query_id, neighbor_id FROM (
     SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
            ROW_NUMBER() OVER (
@@ -2024,27 +1739,16 @@ exact AS (
              ORDER BY ROUND(list_dot_product(q.e, c.e) / (q.nrm * c.nrm), 6) DESC,
                       c.vec_id) AS rk
     FROM normed q JOIN normed c ON q.vec_id < 10 AND c.vec_id <> q.vec_id
-  ) WHERE rk <= {_BQ_K}
-),
-comp AS (
-  SELECT vec_id, i, e[i] AS x FROM emb, (SELECT unnest(generate_series(1, 64)) AS i)
-),
-dim_range AS (SELECT i, MIN(x) AS lo, MAX(x) AS hi FROM comp GROUP BY i),
-rngarr AS (
-  SELECT list(lo ORDER BY i) AS lo_a, list(hi ORDER BY i) AS hi_a FROM dim_range
-),
-codes AS (
-  SELECT vec_id,
-         list_transform(generate_series(1, 64), j ->
-           CASE WHEN r.hi_a[j] = r.lo_a[j] THEN CAST(0 AS BIGINT)
-                ELSE CAST(ROUND((e[j] - r.lo_a[j]) / (r.hi_a[j] - r.lo_a[j]) * 255)
-                          AS BIGINT) END) AS c
-  FROM emb, rngarr r
-),
-words AS (
-  SELECT vec_id, {_bq_pack_sql("c", 1, 32)} AS w1, {_bq_pack_sql("c", 33, 64)} AS w2
-  FROM codes
-),
+  ) WHERE rk <= 5
+)"""
+
+
+@register(
+    "q_ann_binary_recall",
+    oracle=f"""
+WITH {_SQL_EMB}, {_SQL_NORMED},
+{_SQL_EXACT5},
+{_SQL_BQ},
 shortlist AS (
   SELECT query_id, neighbor_id FROM (
     SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
@@ -2084,52 +1788,13 @@ def q_ann_binary_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     you run this report on a sampled slice (the sample task's hash
     method composes upstream), not the full corpus, and the binary
     arm's cost model is unchanged from q_ann_binary_hamming."""
-    nf = _normed(spark, sf_dir)
-    q = nf.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
-    c = nf.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm")
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qn") * F.col("nrm")),
-        6,
-    )
-    w_e = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    exact = (
-        q.join(c, F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rk", F.row_number().over(w_e))
-        .where(F.col("rk") <= _BQ_K)
-        .select("query_id", "neighbor_id")
-    )
+    exact = _bruteforce(_normed(spark, sf_dir), _BQ_K).select("query_id", "neighbor_id")
     emb = T(spark, sf_dir, "embeddings").select(
         "vec_id", F.expr("cast(embedding as array<double>)").alias("e")
     )
     words = binary_codes_frame(emb)
-    qw = words.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("w1").alias("qw1"),
-        F.col("w2").alias("qw2"),
-    )
-    nw = words.select(F.col("vec_id").alias("neighbor_id"), "w1", "w2")
-    w_h = Window.partitionBy("query_id").orderBy("ham", "neighbor_id")
-    shortlist = (
-        qw.join(nw, F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", F.expr(_BQ_HAM).alias("ham"))
-        .withColumn("rkh", F.row_number().over(w_h))
-        .where(F.col("rkh") <= _BQ_SHORTLIST)
-        .select("query_id", "neighbor_id", F.lit(1).alias("_in"))
-    )
-    return (
-        exact.join(shortlist, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce("_in", F.lit(0))).cast("bigint").alias("n_hit"),
-            F.expr(
-                f"cast((sum(coalesce(_in, 0)) * 1000000) div {_BQ_K} as bigint)"
-            ).alias("recall_ppm"),
-        )
-    )
+    cand = shortlist_by(_hamming_scan(words, words), _BQ_SHORTLIST, "ham")
+    return _recall(exact, cand, _BQ_K)
 
 
 def ann_index_search_cascade(
@@ -2160,87 +1825,58 @@ def ann_index_search_cascade(
     integers, so the only FP surface is the final rounded cosine —
     identical determinism contract to the registered query.
     """
-    cent = spark.table(f"{index}_centroids")
-    q = queries.select(
-        F.col("query_id").alias("vec_id"),
-        F.expr("cast(e as array<double>)").alias("e"),
-    )
-    probes = _assign_cells(q, cent, nprobe=nprobe).select(
-        F.col("vec_id").alias("query_id"), "cell"
-    )
-    grid = spark.table(f"{index}_sq8grid")
+    q, probes = _catalog_probe(spark, index, queries, nprobe)
     # NOT persisted: the query frame is batch-sized and this function
     # runs inside stream_ann_search's foreachBatch, where a tracked
     # persist per trigger would accumulate for the stream's lifetime
     # (release_persisted only runs at task/app boundaries); recomputing
     # the row-local quantization for the tier-2 join is cheaper
-    qcodes = q.crossJoin(F.broadcast(grid)).select(
-        F.col("vec_id").alias("query_id"), sq8_codes_col().alias("qc")
-    )
-    qwords = (
-        qcodes.select(
-            "query_id",
-            F.expr(_bq_pack_expr("qc", *_BQ_WORDS[0])).alias("qw1"),
-            F.expr(_bq_pack_expr("qc", *_BQ_WORDS[1])).alias("qw2"),
-        )
-        .join(probes, "query_id")
-    )
-    words = spark.table(f"{index}_binwords").select(
-        F.col("vec_id").alias("neighbor_id"), "cell", "w1", "w2"
-    )
-    w_h = Window.partitionBy("query_id").orderBy("ham", "neighbor_id")
-    t1 = (
-        words.join(F.broadcast(qwords), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", F.expr(_BQ_HAM).alias("ham"))
-        .withColumn("rk1", F.row_number().over(w_h))
-        .where(F.col("rk1") <= shortlist_binary)
-        .select("query_id", "neighbor_id")
+    qcoded = _quantized_queries(spark, index, q, ("c", "w1", "w2"))
+    words = spark.table(f"{index}_binwords").withColumnRenamed("vec_id", "neighbor_id")
+    t1 = _cell_scan(
+        words,
+        qcoded.select("query_id", "qw1", "qw2").join(probes, "query_id"),
+        _BQ_HAM,
+        shortlist_binary,
     )
     codes = spark.table(f"{index}_sq8codes").select(
         F.col("vec_id").alias("neighbor_id"), F.col("c").alias("cc")
     )
-    w_d = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    t2 = (
-        t1.join(qcodes, "query_id")
-        .join(codes, "neighbor_id")
-        .select("query_id", "neighbor_id", F.expr(_SQ8_D2).alias("d2"))
-        .withColumn("rk2", F.row_number().over(w_d))
-        .where(F.col("rk2") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    vec = spark.table(f"{index}_vectors")
-    # zero-norm guard, hoisted to the per-QUERY side (r14): a zero-norm
-    # query has undefined cosine against everything, so it honestly
-    # returns no neighbors — filtered ONCE here, on the tiny query
-    # frame, instead of try_divide + NULL-filter on every candidate row.
-    # Index-side zero norms cannot occur: ``{index}_vectors`` enforces
-    # nrm > 0 at build and ingest (operators/ann.py, streaming
-    # ann ingest), so the per-candidate division below is plain.
-    qn = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.sqrt(F.expr("aggregate(e, 0D, (acc, x) -> acc + x * x)")).alias("qnrm"),
-    ).where(F.col("qnrm") > 0)
-    cn = vec.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm")
-    # plain division is ANSI-safe here: qnrm > 0 was filtered above and
-    # nrm > 0 is the ``{index}_vectors`` invariant (enforced at build
-    # and ingest since r14 — one empty doc used to DIVIDE_BY_ZERO-kill
-    # every search probing its cell, review r13)
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qnrm") * F.col("nrm")),
-        6,
-    )
-    scored_exact = (
-        t2.join(qn, "query_id")
-        .join(cn, "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-    )
-    w_out = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored_exact.withColumn("rk", F.row_number().over(w_out))
-        .where(F.col("rk") <= k)
+    t2 = sq8_rerank(t1, qcoded.select("query_id", "qc"), codes, shortlist)
+    return _catalog_rerank(spark, index, q, t2, k)
+
+
+# The single method -> tables table of the ann_index family: each method
+# maps to (its quantizer tables, its per-vector code tables), written by
+# a full build beside ``{index}_centroids`` and ``{index}_vectors``.
+# Code tables grow with every insert and identify the built method
+# (built_method); the ann_index task, the incremental insert / heal,
+# ann_catalog_search and the streaming twins all read this table.
+ANN_METHODS: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {
+    "ivf": ((), ()),
+    "ivfpq": (("_codebook",), ("_codes",)),
+    "ivfsq8": (("_sq8grid",), ("_sq8codes",)),
+    "ivfbin": (("_sq8grid",), ("_binwords",)),
+    "cascade": (("_sq8grid",), ("_sq8codes", "_binwords")),
+}
+
+
+def built_method(db, index: str) -> str:
+    """The method an existing index was built with, read from which code
+    tables exist.  A code-table set no method declares (a hand-edited
+    catalog) raises instead of guessing a search path."""
+    present = {
+        t
+        for _, codes in ANN_METHODS.values()
+        for t in codes
+        if db.table_exists(f"{index}{t}")
+    }
+    for method, (_, codes) in ANN_METHODS.items():
+        if set(codes) == present:
+            return method
+    raise ValueError(
+        f"{index}: code tables {sorted(present)} match no ann_index method — "
+        "rebuild the index (mode: full)"
     )
 
 
@@ -2254,19 +1890,17 @@ def ann_catalog_search(
     shortlist: int = 20,
     shortlist_binary: int = 50,
 ) -> DataFrame:
-    """Catalog-dispatched search over an ``ann_index``-built index —
-    the path comes from which code tables EXIST, not from caller
-    config (shared by the ann_search task and stream_ann_search):
-    ``{index}_binwords`` + ``{index}_sq8codes`` together -> the
-    three-tier cascade (Hamming shortlist_binary -> SQ8 shortlist ->
-    exact k), ``{index}_binwords`` alone -> packed Hamming,
-    ``{index}_sq8codes`` alone -> symmetric SQ8, ``{index}_codes`` ->
-    ADC (vector/residual via the codebook's enc column), else the
-    exact in-cell scan.  ``queries`` is a (query_id, e: array<double>)
-    frame."""
-    has_bin = db.table_exists(f"{index}_binwords")
-    has_sq8 = db.table_exists(f"{index}_sq8codes")
-    if has_bin and has_sq8:
+    """Catalog-dispatched search over an ``ann_index``-built index (shared
+    by the ann_search task and stream_ann_search): the path follows
+    ``built_method`` — cascade (Hamming shortlist_binary -> SQ8
+    shortlist -> exact k), ivfbin (packed Hamming), ivfsq8 (symmetric
+    SQ8), ivfpq (ADC; vector/residual via the codebook's enc column) or
+    ivf (the exact in-cell scan).  ``queries`` is a (query_id, e:
+    array<double>) frame."""
+    method = built_method(db, index)
+    if method == "ivf":
+        return ann_index_search(spark, index, queries, k=k, nprobe=nprobe)
+    if method == "cascade":
         return ann_index_search_cascade(
             spark,
             index,
@@ -2276,19 +1910,12 @@ def ann_catalog_search(
             shortlist=shortlist,
             shortlist_binary=shortlist_binary,
         )
-    if has_bin:
-        return ann_index_search_binary(
-            spark, index, queries, k=k, nprobe=nprobe, shortlist=shortlist
-        )
-    if has_sq8:
-        return ann_index_search_sq8(
-            spark, index, queries, k=k, nprobe=nprobe, shortlist=shortlist
-        )
-    if db.table_exists(f"{index}_codes"):
-        return ann_index_search_pq(
-            spark, index, queries, k=k, nprobe=nprobe, shortlist=shortlist
-        )
-    return ann_index_search(spark, index, queries, k=k, nprobe=nprobe)
+    search = {
+        "ivfpq": ann_index_search_pq,
+        "ivfsq8": ann_index_search_sq8,
+        "ivfbin": ann_index_search_binary,
+    }[method]
+    return search(spark, index, queries, k=k, nprobe=nprobe, shortlist=shortlist)
 
 
 # --- Embedding outlier report (mislabel / noise detection) -------------
@@ -2333,19 +1960,10 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is one scan over the vectors."""
     emb = _normed(spark, sf_dir).select("vec_id", "label", "e")
     cent = _centroid_arrays(emb.select("label", "e"))
-    d2 = F.round(
-        F.expr(
-            "aggregate(zip_with(e, ce, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
-        ),
-        8,
-    )
     dist = emb.join(
         F.broadcast(cent), emb["label"] == cent["c_label"]
-    ).select("label", "vec_id", d2.alias("d2"))
-    w = Window.partitionBy("label").orderBy(F.desc("d2"), "vec_id")
-    return dist.withColumn("rk", F.row_number().over(w)).where(
-        F.col("rk") <= _OUT_TOPN
-    )
+    ).select("label", "vec_id", _d2("e", "ce").alias("d2"))
+    return top_k(dist, _OUT_TOPN, F.desc("d2"), "vec_id", by="label")
 
 
 # ---------------------------------------------------------------------------
@@ -2398,7 +2016,6 @@ def srp_project_expr(out_dim: int, in_dim: int, col: str = "e") -> str:
     )
 
 
-_SRP_SPARK_LIT = srp_spark_literal(_SRP_OUT_DIM, 64)
 _SRP_SQL_LIT = (
     "[" + ",".join(
         "[" + ",".join(str(v) for v in row) + "]"
@@ -2467,10 +2084,7 @@ def q_embedding_srp_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     proj = emb.select(
         "vec_id",
         "e",
-        F.expr(
-            f"transform({_SRP_SPARK_LIT}, "
-            "s -> aggregate(zip_with(e, s, (x, sg) -> x * sg), 0D, (acc, v) -> acc + v))"
-        ).alias("y"),
+        F.expr(srp_project_expr(_SRP_OUT_DIM, 64)).alias("y"),
     )
     proj = persist_tracked(proj)  # read by both sides of the audit join
     a = proj.select(
@@ -2483,15 +2097,11 @@ def q_embedding_srp_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("e").alias("eb"),
         F.col("y").alias("yb"),
     )
-    d2 = (
-        "round(aggregate(zip_with({l}, {r}, (x, z) -> (x - z) * (x - z)), "
-        "0D, (acc, v) -> acc + v), 8)"
-    )
     pairs = a.join(b, F.col("id_b") == F.col("id_a") + 1).select(
         "id_a",
         "id_b",
-        F.expr(d2.format(l="ea", r="eb")).alias("d2_orig"),
-        F.expr(d2.format(l="ya", r="yb")).alias("d2_proj"),
+        _d2("ea", "eb").alias("d2_orig"),
+        _d2("ya", "yb").alias("d2_proj"),
     )
     return pairs.where(F.col("d2_orig") > 0).select(
         "id_a",
@@ -2512,16 +2122,7 @@ _SRP_K = 5
     "q_ann_srp_recall",
     oracle=f"""
 WITH {_SQL_EMB}, {_SQL_NORMED},
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY ROUND(list_dot_product(q.e, c.e) / (q.nrm * c.nrm), 6) DESC,
-                      c.vec_id) AS rk
-    FROM normed q JOIN normed c ON q.vec_id < 10 AND c.vec_id <> q.vec_id
-  ) WHERE rk <= {_SRP_K}
-),
+{_SQL_EXACT5},
 unit AS (
   SELECT vec_id, list_transform(e, x -> x / nrm) AS u FROM normed WHERE nrm > 0
 ),
@@ -2578,23 +2179,7 @@ def q_ann_srp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles per corpus vector instead of 64 — the 4x scan saving IS
     the tier's value, and the report prices its recall cost."""
     nf = _normed(spark, sf_dir)
-    q = nf.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
-    c = nf.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm")
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qn") * F.col("nrm")),
-        6,
-    )
-    w_e = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    exact = (
-        q.join(c, F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rk", F.row_number().over(w_e))
-        .where(F.col("rk") <= _SRP_K)
-        .select("query_id", "neighbor_id")
-    )
+    exact = _bruteforce(nf, _SRP_K).select("query_id", "neighbor_id")
     unit = nf.where(F.col("nrm") > 0).select(
         "vec_id", F.expr("transform(e, x -> x / nrm)").alias("u")
     )
@@ -2605,47 +2190,17 @@ def q_ann_srp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("y").alias("qy")
     )
     np_ = proj.select(F.col("vec_id").alias("neighbor_id"), F.col("y").alias("ny"))
-    d2 = F.round(
-        F.expr(
-            "aggregate(zip_with(qy, ny, (x, z) -> (x - z) * (x - z)), "
-            "0D, (acc, v) -> acc + v)"
-        ),
-        8,
+    scored = _all_pairs(qp, np_).select(
+        "query_id", "neighbor_id", _d2("qy", "ny").alias("d2")
     )
-    w_d = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    shortlist = (
-        qp.join(np_, F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", d2.alias("d2"))
-        .withColumn("rkd", F.row_number().over(w_d))
-        .where(F.col("rkd") <= _SRP_SHORTLIST)
-        .select("query_id", "neighbor_id", F.lit(1).alias("_in"))
-    )
-    return (
-        exact.join(shortlist, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce("_in", F.lit(0))).cast("bigint").alias("n_hit"),
-            F.expr(
-                f"cast((sum(coalesce(_in, 0)) * 1000000) div {_SRP_K} as bigint)"
-            ).alias("recall_ppm"),
-        )
-    )
+    return _recall(exact, shortlist_by(scored, _SRP_SHORTLIST, "d2"), _SRP_K)
 
 
 @register(
     "q_ann_nprobe_curve",
     oracle=f"""
 WITH {_SQL_EMB}, {_SQL_NORMED}, {_SQL_CENTROIDS},
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY ROUND(list_dot_product(q.e, c.e) / (q.nrm * c.nrm), 6) DESC,
-                      c.vec_id) AS rk
-    FROM normed q JOIN normed c ON q.vec_id < 10 AND c.vec_id <> q.vec_id
-  ) WHERE rk <= 5
-),
+{_SQL_EXACT5},
 ecell AS (
   SELECT vec_id, c_label AS cell FROM (
     SELECT v.vec_id, c.c_label, ROW_NUMBER() OVER (
@@ -2698,36 +2253,17 @@ def q_ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     telemetry-sized frames (50 exact rows x 3 probe widths)."""
     nf = _normed(spark, sf_dir)
     cent = _centroid_arrays(nf.select("label", "e"))
-    q = nf.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
-    c = nf.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm")
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, e, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qn") * F.col("nrm")),
-        6,
-    )
-    w_e = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    exact = (
-        q.join(c, F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rk", F.row_number().over(w_e))
-        .where(F.col("rk") <= 5)
-        .select("query_id", "neighbor_id")
-    )
+    exact = _bruteforce(nf, 5).select("query_id", "neighbor_id")
     ecell = _assign_cells(nf, cent)
-    d2 = F.round(
-        F.expr(
-            "aggregate(zip_with(e, ce, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
-        ),
-        8,
-    )
+    # every centroid rank of each query (the rank is data here, not a
+    # top-k filter): probe width np recalls a neighbor iff its cell
+    # ranks <= np
     w_q = Window.partitionBy("query_id").orderBy("d2", "c_label")
     qcell = (
         nf.where(F.col("vec_id") < 10)
         .select(F.col("vec_id").alias("query_id"), "e")
         .crossJoin(F.broadcast(cent))
-        .select("query_id", "c_label", d2.alias("d2"))
+        .select("query_id", "c_label", _d2("e", "ce").alias("d2"))
         .withColumn("rkc", F.row_number().over(w_q))
         .select("query_id", F.col("c_label").alias("cell"), "rkc")
     )
@@ -2753,25 +2289,7 @@ def q_ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_ann_cascade_topk",
     oracle=f"""
 WITH {_SQL_EMB}, {_SQL_NORMED},
-comp AS (
-  SELECT vec_id, i, e[i] AS x FROM emb, (SELECT unnest(generate_series(1, 64)) AS i)
-),
-dim_range AS (SELECT i, MIN(x) AS lo, MAX(x) AS hi FROM comp GROUP BY i),
-rngarr AS (
-  SELECT list(lo ORDER BY i) AS lo_a, list(hi ORDER BY i) AS hi_a FROM dim_range
-),
-codes AS (
-  SELECT vec_id,
-         list_transform(generate_series(1, 64), j ->
-           CASE WHEN r.hi_a[j] = r.lo_a[j] THEN CAST(0 AS BIGINT)
-                ELSE CAST(ROUND((e[j] - r.lo_a[j]) / (r.hi_a[j] - r.lo_a[j]) * 255)
-                          AS BIGINT) END) AS c
-  FROM emb, rngarr r
-),
-words AS (
-  SELECT vec_id, {_bq_pack_sql("c", 1, 32)} AS w1, {_bq_pack_sql("c", 33, 64)} AS w2
-  FROM codes
-),
+{_SQL_BQ},
 t1 AS (
   SELECT query_id, neighbor_id FROM (
     SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
@@ -2843,66 +2361,17 @@ def q_ann_cascade_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the CORPUS — collect it once and apply it to corpus and queries
     # alike; training it on the head would change every tier
     rng = _as_local(sq8_range_row(emb))
-    code_col = sq8_codes_col("e", 64)
-
-    def words_of(frame: DataFrame) -> DataFrame:
-        return binary_codes_frame(frame, rng=rng)
-
-    qw = words_of(head).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("w1").alias("qw1"),
-        F.col("w2").alias("qw2"),
+    t1 = shortlist_by(
+        _hamming_scan(binary_codes_frame(head, rng=rng), binary_codes_frame(emb, rng=rng)),
+        50,
+        "ham",
     )
-    nw = words_of(emb).select(F.col("vec_id").alias("neighbor_id"), "w1", "w2")
-    w_h = Window.partitionBy("query_id").orderBy("ham", "neighbor_id")
-    t1 = (
-        qw.join(nw, F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", F.expr(_BQ_HAM).alias("ham"))
-        .withColumn("rk1", F.row_number().over(w_h))
-        .where(F.col("rk1") <= 50)
-        .select("query_id", "neighbor_id")
+    codes = quantize(emb, rng, "vec_id", dims=64).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("c").alias("cc")
     )
-    codes = emb.crossJoin(F.broadcast(rng)).select("vec_id", code_col.alias("c"))
-    qcodes = head.crossJoin(F.broadcast(rng)).select(
-        F.col("vec_id").alias("query_id"), code_col.alias("qc")
+    qcodes = quantize(head, rng, "vec_id", dims=64).select(
+        F.col("vec_id").alias("query_id"), F.col("c").alias("qc")
     )
-    w_d = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    t2 = (
-        t1.join(qcodes, "query_id")
-        .join(
-            codes.select(
-                F.col("vec_id").alias("neighbor_id"), F.col("c").alias("cc")
-            ),
-            "neighbor_id",
-        )
-        .select("query_id", "neighbor_id", F.expr(_SQ8_D2).alias("d2"))
-        .withColumn("rk2", F.row_number().over(w_d))
-        .where(F.col("rk2") <= 20)
-        .select("query_id", "neighbor_id")
-    )
-    nf = _normed(spark, sf_dir)
-    qf = head.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.sqrt(F.expr("aggregate(e, 0D, (acc, x) -> acc + x * x)")).alias("qn"),
-    )
-    cos = F.round(
-        F.expr("aggregate(zip_with(qe, ne, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-        / (F.col("qn") * F.col("nn")),
-        6,
-    )
-    w_c = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        t2.join(qf, "query_id")
-        .join(
-            nf.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("e").alias("ne"),
-                F.col("nrm").alias("nn"),
-            ),
-            "neighbor_id",
-        )
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rk", F.row_number().over(w_c))
-        .where(F.col("rk") <= 5)
-    )
+    t2 = sq8_rerank(t1, qcodes, codes, 20)
+    qf = query_side(head.withColumn("nrm", _norm()))
+    return exact_rerank(t2, qf, neighbor_side(_normed(spark, sf_dir)), 5)

@@ -12,43 +12,44 @@ demonstrate as queries, promoted to a catalog-managed artifact the way
         n_cells: 16               # seed by id-hash when no label_column
         refine_iters: 1           # Lloyd iterations after seeding
         method: ivfpq             # ivf (default) | ivfpq | ivfsq8
-                                  #   | ivfbin (packed sign bits +
-                                  #   Hamming scan, 16 bytes/vector)
-                                  #   | cascade (sq8 + binary layers
-                                  #   over one grid — searched as the
-                                  #   Hamming -> SQ8 -> exact cascade)
+                                  #   | ivfbin | cascade
         codebook: trained         # ivfpq only: seed (default) | trained
         pq_iters: 3               # trained: per-subspace Lloyd steps
         encode: residual          # ivfpq only: vector (default) |
-                                  # residual (quantize e - centroid,
-                                  # the FAISS IVFPQ default — sharper
-                                  # ADC on clustered corpora)
+                                  # residual (quantize e - centroid)
+        mode: incremental         # full (default) | incremental
 
-Builds two catalog tables:
+Every method builds ``{index}_centroids`` (c_label, ce: array<double>)
+— the coarse quantizer, broadcast-sized at any scale — and
+``{index}_vectors`` (vec_id, cell, e, nrm) BUCKETED BY cell, the
+inverted file: searches join probes against it on the cell key, so the
+big side is read in place and only query rows shuffle.
 
-- ``{index}_centroids`` (c_label, ce: array<double>) — the coarse
-  quantizer, small enough to broadcast at any scale.
-- ``{index}_vectors`` (vec_id, cell, e, nrm) BUCKETED BY cell — the
-  inverted file.  Searches join probes against it on the cell key, so
-  the big side arrives pre-bucketed and only query rows shuffle; each
-  query reads nprobe/k of the corpus.
+The side tables each method adds (quantizer tables plus per-vector
+code tables, bucketed by cell like the vectors) are declared ONCE, in
+``functions/similarity.py:ANN_METHODS``; ``built_method`` recovers an
+existing index's method from its code tables.  This task's outputs and
+full build, the incremental insert and heal (ann_insert_batch),
+the search dispatch (similarity.py:ann_catalog_search) and the
+streaming twins all read that table.  A full build drops every side
+table its method does not declare, so a rebuild under another method
+never leaves a stale layer for searches to dispatch to.
 
-Search is a library call over the tables
-(functions/similarity.py:ann_index_search), so any task or ad-hoc
+Search is a library call over the tables, so any task or ad-hoc
 session can query an index built by a previous run — the index
 persists; rebuilds are full (replace_table semantics, like autosql
-``table``).
-
-Determinism contract matches the registered queries: centroid means
-sum in DECIMAL and round to 8dp; distances fold left-to-right and
-round before argmin; every top-k carries a unique tie-break.
+``table``).  Every stage (probe, quantize, PQ encode, residual,
+shortlist, exact re-rank) is the shared implementation in
+functions/similarity.py, so determinism matches the registered
+queries: centroid means sum in DECIMAL and round to 8dp; distances
+fold left-to-right and round before argmin; every top-k carries a
+unique tie-break.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from sayn_spark.operators.base import Task, TaskStatus
 
@@ -57,10 +58,16 @@ from sayn_spark.operators.base import Task, TaskStatus
 # when the bucket count equals the expected partition count — with a
 # mismatch both sides re-shuffle and the bucketing buys nothing.
 _VEC_BUCKETS = 32
+_BUCKETED = {"bucket_by": (_VEC_BUCKETS, ["cell"])}
+
+# the columns each SQ8-grid code table stores (beside vec_id, cell)
+_GRID_LAYERS = {"_sq8codes": ("c",), "_binwords": ("w1", "w2")}
 
 
 class AnnIndexTask(Task):
     def config(self) -> None:
+        from sayn_spark.functions.similarity import ANN_METHODS
+
         c = self.config_dict
         self.source = self.compile_property(c.get("source"))
         if not self.source:
@@ -72,10 +79,10 @@ class AnnIndexTask(Task):
         self.vector_column = c.get("vector_column", "embedding")
         self.label_column = c.get("label_column")
         self.method = c.get("method", "ivf")
-        if self.method not in ("ivf", "ivfpq", "ivfsq8", "ivfbin", "cascade"):
+        if self.method not in ANN_METHODS:
             raise ValueError(
                 f"ann_index task {self.name!r}: method must be "
-                "ivf|ivfpq|ivfsq8|ivfbin|cascade"
+                + "|".join(ANN_METHODS)
             )
         self.n_cells = int(c.get("n_cells", 16))
         if self.n_cells < 1:
@@ -132,15 +139,8 @@ class AnnIndexTask(Task):
         self.src_obj = self.context.obj_compiler.from_string(self.source)
         self.sources.add(self.src_obj)
         self.src_value = self.context.obj_compiler.src_value(self.src_obj)
-        suffixes = ("_centroids", "_vectors")
-        if self.method == "ivfpq":
-            suffixes += ("_codebook", "_codes")
-        elif self.method == "ivfsq8":
-            suffixes += ("_sq8grid", "_sq8codes")
-        elif self.method == "ivfbin":
-            suffixes += ("_sq8grid", "_binwords")
-        elif self.method == "cascade":
-            suffixes += ("_sq8grid", "_sq8codes", "_binwords")
+        quant, codes = ANN_METHODS[self.method]
+        suffixes = ("_centroids", "_vectors", *quant, *codes)
         # the PHYSICAL base name all side tables derive from: routed
         # through the dev/prod stringify like every other destination —
         # writing the raw name would make a dev run (table_prefix: dev)
@@ -215,12 +215,25 @@ class AnnIndexTask(Task):
         return fan_out_table(out, self.context.spark, self.src_value)
 
     def run(self) -> None:
-        from sayn_spark.functions.similarity import _assign_cells, _centroid_arrays
+        from sayn_spark.functions.similarity import (
+            ANN_METHODS,
+            _assign_cells,
+            _centroid_arrays,
+            _norm,
+        )
 
         db = self.context.db
         if self.mode == "incremental":
             self._run_incremental()
             return
+        # a rebuild under another method drops the old method's side
+        # tables: left in place, built_method (and so every catalog
+        # search) would keep dispatching to a layer that no longer
+        # matches the rebuilt cells
+        quant, codes = ANN_METHODS[self.method]
+        side = {t for q, c in ANN_METHODS.values() for t in q + c}
+        for suffix in sorted(side - {*quant, *codes}):
+            db.drop_object(f"{self.index}{suffix}")
         emb = self._emb().localCheckpoint()  # read by seed + every Lloyd pass
         cent = _centroid_arrays(emb.select("label", "e"))
         for _ in range(self.refine_iters):
@@ -242,7 +255,7 @@ class AnnIndexTask(Task):
                 # the key's type must match what probes produce
                 F.col("cell").cast("bigint").alias("cell"),
                 "e",
-                F.sqrt(F.expr("aggregate(e, 0D, (acc, x) -> acc + x * x)")).alias("nrm"),
+                _norm().alias("nrm"),
             )
             # INDEX INVARIANT (r14): nrm > 0 for every stored vector.  A
             # zero-norm vector (the embed task's empty-doc contract) has
@@ -252,36 +265,29 @@ class AnnIndexTask(Task):
             # paying try_divide + NULL-filter per candidate row.
             .where(F.col("nrm") > 0)
         )
-        # bucketed inverted file, rebuilt atomically: write to a staging
-        # table, then rename over the old one (RENAME carries the bucket
-        # spec) — readers never observe a missing or half-written index
-        from sayn_spark.core.database import _tmp_name
-
-        staging = _tmp_name(f"{self.index}_vectors")
-        db.drop_object(staging)
-        db.create_table(
-            staging,
-            vectors,
-            mode="overwrite",
-            bucket_by=(_VEC_BUCKETS, ["cell"]),
-        )
-        db.move_table(staging, f"{self.index}_vectors")
+        # every bucketed table is rebuilt atomically: written to a
+        # staging table, then renamed over the old one (RENAME carries
+        # the bucket spec) — readers never observe a missing or
+        # half-written index
+        db.replace_table(f"{self.index}_vectors", vectors, tmp_swap=True, **_BUCKETED)
         if self.method == "ivfpq":
             self._build_pq()
-        elif self.method == "ivfsq8":
-            self._build_sq8()
-        elif self.method == "ivfbin":
-            self._build_binary()
-        elif self.method == "cascade":
-            self._build_cascade()
+        elif codes:
+            self._build_grid_layers(codes)
 
     def _run_incremental(self) -> None:
         """Insert new source vectors into the existing index: assign to
         the FROZEN centroids, bucketed append to ``{index}_vectors``,
-        and (ivfpq) encode with the frozen codebook into
-        ``{index}_codes``.  Anti-joins on the target tables make every
-        write replay-safe and self-healing — a crash between the two
-        appends repairs on the next run."""
+        and encode with the frozen quantizers into the method's code
+        tables.  Anti-joins on the target tables make every write
+        replay-safe and self-healing — a crash between two appends
+        repairs on the next run."""
+        from sayn_spark.functions.similarity import (
+            ANN_METHODS,
+            built_method,
+            pq_encoding,
+        )
+
         db = self.context.db
         spark = self.context.spark
         for t in (f"{self.index}_centroids", f"{self.index}_vectors"):
@@ -290,19 +296,7 @@ class AnnIndexTask(Task):
                     f"ann_index task {self.name!r}: incremental insert needs an "
                     f"existing index ({t} missing) — run a full build first"
                 )
-        built_pq = db.table_exists(f"{self.index}_codes")
-        built_sq8 = db.table_exists(f"{self.index}_sq8codes")
-        built_bin = db.table_exists(f"{self.index}_binwords")
-        if built_pq:
-            built = "ivfpq"
-        elif built_sq8 and built_bin:
-            built = "cascade"
-        elif built_sq8:
-            built = "ivfsq8"
-        elif built_bin:
-            built = "ivfbin"
-        else:
-            built = "ivf"
+        built = built_method(db, self.index)
         if self.method != built:
             raise ValueError(
                 f"ann_index task {self.name!r}: {self.index} was built with "
@@ -310,23 +304,16 @@ class AnnIndexTask(Task):
                 "leave the quantizer layers stale; set method to match "
                 "(or rebuild full)"
             )
-        if self.method in ("ivfsq8", "ivfbin", "cascade") and not db.table_exists(
-            f"{self.index}_sq8grid"
-        ):
-            raise ValueError(
-                f"ann_index task {self.name!r}: {self.method} incremental insert "
-                f"needs the existing {self.index}_sq8grid — run a full build first"
-            )
         # ALL validation before any write: raising after the vector
         # append would strand a half-inserted batch behind the anti-join
-        stored_enc = "vector"
-        if self.method == "ivfpq":
-            if not db.table_exists(f"{self.index}_codebook"):
+        for suffix in ANN_METHODS[built][0]:
+            if not db.table_exists(f"{self.index}{suffix}"):
                 raise ValueError(
-                    f"ann_index task {self.name!r}: ivfpq incremental insert needs "
-                    f"the existing {self.index}_codebook — run a full build first"
+                    f"ann_index task {self.name!r}: {self.method} incremental insert "
+                    f"needs the existing {self.index}{suffix} — run a full build first"
                 )
-            stored_enc = self._stored_encoding()
+        if self.method == "ivfpq":
+            stored_enc = pq_encoding(spark.table(f"{self.index}_codebook"))
             if stored_enc != self.encode:
                 raise ValueError(
                     f"ann_index task {self.name!r}: {self.index} was built with "
@@ -338,126 +325,34 @@ class AnnIndexTask(Task):
         # (stream_ann_ingest drives the same function per micro-batch)
         ann_insert_batch(spark, db, self.index, self._emb().select("vec_id", "e"))
 
-    def _build_sq8(self) -> None:
-        """SQ8 layer over the IVF cells: ``{index}_sq8grid`` (one row —
-        per-dimension lo/hi arrays, the trained scalar quantizer) and
-        ``{index}_sq8codes`` (vec_id, cell, c: array<bigint> 0..255)
-        bucketed by cell — q_ann_sq8_topk's symmetric-integer design,
-        persisted.  Encoding is a row-local fold against the broadcast
-        grid: building the codes table shuffles nothing beyond the
-        bucketed write."""
-        from sayn_spark.core.database import _tmp_name
-        from sayn_spark.functions.similarity import sq8_codes_col, sq8_range_row
+    def _build_grid_layers(self, codes: tuple[str, ...]) -> None:
+        """SQ8-grid layers over the IVF cells: ``{index}_sq8grid`` (one
+        row — per-dimension lo/hi arrays, the trained scalar quantizer)
+        and the method's code tables, bucketed by cell: ``_sq8codes``
+        (vec_id, cell, c: array<bigint> 0..255 — q_ann_sq8_topk's
+        symmetric-integer design) and/or ``_binwords`` (vec_id, cell,
+        w1, w2: two BIGINT words of packed sign bits, 16 bytes/vector —
+        q_ann_binary_hamming's design).  Both layers come from ONE
+        quantize pass over one frozen grid (the words are the codes'
+        top bits), so a cascade's tiers are consistent by construction
+        (a bit flip between them would break the tier-1 -> tier-2
+        refinement monotonicity).  Encoding is a row-local fold against
+        the broadcast grid: building shuffles nothing beyond the
+        bucketed writes."""
+        from sayn_spark.functions.similarity import quantize, sq8_range_row
 
         db = self.context.db
         spark = self.context.spark
-        vec = spark.table(f"{self.index}_vectors")
-        grid = sq8_range_row(vec.select("vec_id", "e"))
-        db.replace_table(f"{self.index}_sq8grid", grid)
-        codes = (
-            vec.select("vec_id", "cell", "e")
-            .crossJoin(F.broadcast(spark.table(f"{self.index}_sq8grid")))
-            .select("vec_id", "cell", sq8_codes_col().alias("c"))
-        )
-        staging = _tmp_name(f"{self.index}_sq8codes")
-        db.drop_object(staging)
-        db.create_table(
-            staging,
-            codes,
-            mode="overwrite",
-            bucket_by=(_VEC_BUCKETS, ["cell"]),
-        )
-        db.move_table(staging, f"{self.index}_sq8codes")
-
-    def _build_binary(self) -> None:
-        """Binary layer over the IVF cells: ``{index}_sq8grid`` (the
-        shared trained grid — binarisation is the top bit of the SQ8
-        code, i.e. sign against the grid midpoint) and
-        ``{index}_binwords`` (vec_id, cell, w1, w2: two BIGINT words of
-        packed sign bits) bucketed by cell — q_ann_binary_hamming's
-        design, persisted.  16 bytes/vector: the cheapest tier of the
-        quantized-index family; encoding is a row-local fold, so
-        building the words table shuffles nothing beyond the bucketed
-        write."""
-        from sayn_spark.core.database import _tmp_name
-        from sayn_spark.functions.similarity import (
-            _BQ_WORDS,
-            _bq_pack_expr,
-            sq8_codes_col,
-            sq8_range_row,
-        )
-
-        db = self.context.db
-        spark = self.context.spark
-        vec = spark.table(f"{self.index}_vectors")
-        grid = sq8_range_row(vec.select("vec_id", "e"))
-        db.replace_table(f"{self.index}_sq8grid", grid)
-        words = (
-            vec.select("vec_id", "cell", "e")
-            .crossJoin(F.broadcast(spark.table(f"{self.index}_sq8grid")))
-            .select("vec_id", "cell", sq8_codes_col().alias("c"))
-            .select(
-                "vec_id",
-                "cell",
-                F.expr(_bq_pack_expr("c", *_BQ_WORDS[0])).alias("w1"),
-                F.expr(_bq_pack_expr("c", *_BQ_WORDS[1])).alias("w2"),
-            )
-        )
-        staging = _tmp_name(f"{self.index}_binwords")
-        db.drop_object(staging)
-        db.create_table(
-            staging,
-            words,
-            mode="overwrite",
-            bucket_by=(_VEC_BUCKETS, ["cell"]),
-        )
-        db.move_table(staging, f"{self.index}_binwords")
-
-    def _build_cascade(self) -> None:
-        """Both quantized layers over ONE frozen grid: ``{index}_sq8grid``
-        + ``{index}_sq8codes`` + ``{index}_binwords`` — the stored
-        tables the three-tier retrieval cascade
-        (functions/similarity.py:ann_index_search_cascade /
-        q_ann_cascade_topk) searches.  The SQ8 codes are computed once
-        and the binary words are their top bit, so the two layers are
-        consistent by construction (a bit flip between them would break
-        the tier-1 -> tier-2 refinement monotonicity)."""
-        from sayn_spark.core.database import _tmp_name
-        from sayn_spark.functions.similarity import (
-            _BQ_WORDS,
-            _bq_pack_expr,
-            sq8_codes_col,
-            sq8_range_row,
-        )
-
-        db = self.context.db
-        spark = self.context.spark
-        vec = spark.table(f"{self.index}_vectors")
-        grid = sq8_range_row(vec.select("vec_id", "e"))
-        db.replace_table(f"{self.index}_sq8grid", grid)
-        codes = (
-            vec.select("vec_id", "cell", "e")
-            .crossJoin(F.broadcast(spark.table(f"{self.index}_sq8grid")))
-            .select("vec_id", "cell", sq8_codes_col().alias("c"))
-        ).localCheckpoint()  # read by both layer writes
-        staging = _tmp_name(f"{self.index}_sq8codes")
-        db.drop_object(staging)
-        db.create_table(
-            staging, codes, mode="overwrite", bucket_by=(_VEC_BUCKETS, ["cell"])
-        )
-        db.move_table(staging, f"{self.index}_sq8codes")
-        words = codes.select(
-            "vec_id",
-            "cell",
-            F.expr(_bq_pack_expr("c", *_BQ_WORDS[0])).alias("w1"),
-            F.expr(_bq_pack_expr("c", *_BQ_WORDS[1])).alias("w2"),
-        )
-        staging = _tmp_name(f"{self.index}_binwords")
-        db.drop_object(staging)
-        db.create_table(
-            staging, words, mode="overwrite", bucket_by=(_VEC_BUCKETS, ["cell"])
-        )
-        db.move_table(staging, f"{self.index}_binwords")
+        vec = spark.table(f"{self.index}_vectors").select("vec_id", "cell", "e")
+        db.replace_table(f"{self.index}_sq8grid", sq8_range_row(vec))
+        grid = spark.table(f"{self.index}_sq8grid")
+        out = tuple(col for t in codes for col in _GRID_LAYERS[t])
+        coded = quantize(vec, grid, "vec_id", "cell", out=out)
+        if len(codes) > 1:
+            coded = coded.localCheckpoint()  # read by both layer writes
+        for t in codes:
+            layer = coded.select("vec_id", "cell", *_GRID_LAYERS[t])
+            db.replace_table(f"{self.index}{t}", layer, tmp_swap=True, **_BUCKETED)
 
     def _train_pq(self, subs: DataFrame, seed_ids: DataFrame) -> DataFrame:
         """Per-subspace k-means codebook (s, c, cw): 16 codewords per
@@ -474,6 +369,8 @@ class AnnIndexTask(Task):
         sub) assignment stage is distributed."""
         from pyspark.sql.window import Window
 
+        from sayn_spark.functions.similarity import _d2, top_k
+
         w_seed = Window.orderBy("vec_id")  # 16 rows: global window is fine
         seeds = seed_ids.select(
             "vec_id", (F.row_number().over(w_seed) - 1).alias("c")
@@ -481,20 +378,11 @@ class AnnIndexTask(Task):
         cb = subs.join(F.broadcast(seeds), "vec_id").select(
             "s", "c", F.col("sub").alias("cw")
         )
-        d2 = F.round(
-            F.expr(
-                "aggregate(zip_with(sub, cw, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
-            ),
-            8,
-        )
-        w_assign = Window.partitionBy("vec_id", "s").orderBy("d2", "c")
         for _ in range(self.pq_iters):
-            assigned = (
-                subs.join(F.broadcast(cb), "s")
-                .select("vec_id", "s", "sub", "c", d2.alias("d2"))
-                .withColumn("rk", F.row_number().over(w_assign))
-                .where(F.col("rk") == 1)
+            dists = subs.join(F.broadcast(cb), "s").select(
+                "vec_id", "s", "sub", "c", _d2("sub", "cw").alias("d2")
             )
+            assigned = top_k(dists, 1, "d2", "c", by=["vec_id", "s"])
             comp = assigned.select("s", "c", F.posexplode("sub").alias("pos", "x"))
             means = comp.groupBy("s", "c", "pos").agg(
                 F.round(
@@ -516,15 +404,6 @@ class AnnIndexTask(Task):
             )
         return cb
 
-    def _residual_frame(self, vec: DataFrame) -> DataFrame:
-        return _residual_frame(self.context.spark, self.index, vec)
-
-    def _stored_encoding(self) -> str:
-        return _stored_encoding(self.context.spark, self.index)
-
-    def _encode_pq(self, vec: DataFrame, residual: bool) -> DataFrame:
-        return _encode_pq(self.context.spark, self.index, vec, residual)
-
     def _build_pq(self) -> None:
         """PQ layer over the IVF cells: ``{index}_codebook`` (s, c, cw)
         — 8 subspaces x 16 codewords, broadcast-sized — and
@@ -537,24 +416,21 @@ class AnnIndexTask(Task):
         stand-in.  ``codebook: trained`` runs ``pq_iters`` per-subspace
         Lloyd steps from those same seeds (see _train_pq), improving
         ADC recall on clustered corpora while staying deterministic.
+        ``encode: residual`` quantizes e - centroid(cell) instead of e;
+        the choice is persisted on the codebook (enc column), where
+        searches and incremental inserts read it.
         """
-        from sayn_spark.core.database import _tmp_name
+        from sayn_spark.functions.similarity import pq_subspaces, residual
 
         db = self.context.db
         spark = self.context.spark
-        vec = spark.table(f"{self.index}_vectors")
+        vec = spark.table(f"{self.index}_vectors").select("vec_id", "cell", "e")
         enc_src = (
-            self._residual_frame(vec.select("vec_id", "cell", "e"))
+            residual(vec, spark.table(f"{self.index}_centroids"))
             if self.encode == "residual"
             else vec
         )
-        subs = enc_src.select(
-            "vec_id",
-            "cell",
-            F.posexplode(
-                F.expr("transform(sequence(0, 7), s -> slice(e, s * 8 + 1, 8))")
-            ).alias("s", "sub"),
-        )
+        subs = pq_subspaces(enc_src, "vec_id", "cell")
         # TakeOrderedAndProject, not a global window: the 16 lowest ids
         seed_ids = vec.select("vec_id").orderBy("vec_id").limit(16)
         if self.codebook == "trained":
@@ -567,80 +443,44 @@ class AnnIndexTask(Task):
         db.replace_table(
             f"{self.index}_codebook", cb.withColumn("enc", F.lit(self.encode))
         )
-        codes = self._encode_pq(vec, residual=self.encode == "residual")
-        staging = _tmp_name(f"{self.index}_codes")
-        db.drop_object(staging)
-        db.create_table(
-            staging, codes, mode="overwrite", bucket_by=(_VEC_BUCKETS, ["cell"])
-        )
-        db.move_table(staging, f"{self.index}_codes")
+        codes = _encode_pq(spark, self.index, vec, self.encode)
+        db.replace_table(f"{self.index}_codes", codes, tmp_swap=True, **_BUCKETED)
 
     def compile(self) -> None:
         return None
 
 
-def _residual_frame(spark, index: str, vec: DataFrame) -> DataFrame:
-    """Replace ``e`` with the within-cell residual e - centroid:
-    broadcast the (tiny) centroid table, exact double subtraction.
-    ``vec`` must carry (vec_id, cell, e)."""
-    cent = spark.table(f"{index}_centroids").select(
-        F.col("c_label").cast("bigint").alias("cell"), "ce"
-    )
-    keep = [c for c in vec.columns if c != "e"]
-    return vec.join(F.broadcast(cent), "cell").select(
-        *keep, F.expr("zip_with(e, ce, (x, y) -> x - y)").alias("e")
-    )
+def _encode_pq(spark, index: str, vec: DataFrame, enc: str) -> DataFrame:
+    """(vec_id, cell, s, c) codes for ``vec`` (vec_id, cell, e) rows
+    under the existing (frozen) ``{index}_codebook``; ``enc`` is the
+    codebook's encoding (vector | residual)."""
+    from sayn_spark.functions.similarity import pq_encode, pq_subspaces, residual
 
-
-def _stored_encoding(spark, index: str) -> str:
-    """The encoding the existing codebook was built with ("vector" for
-    pre-residual indexes that have no enc column)."""
-    cb = spark.table(f"{index}_codebook")
-    if "enc" not in cb.columns:
-        return "vector"
-    row = cb.select("enc").first()
-    return row["enc"] if row is not None else "vector"
-
-
-def _encode_pq(spark, index: str, vec: DataFrame, residual: bool) -> DataFrame:
-    """(vec_id, cell, s, c) codes for ``vec`` rows under the existing
-    (frozen) ``{index}_codebook``."""
+    vec = vec.select("vec_id", "cell", "e")
+    if enc == "residual":
+        vec = residual(vec, spark.table(f"{index}_centroids"))
     cb = spark.table(f"{index}_codebook").drop("enc")
-    if residual:
-        vec = _residual_frame(spark, index, vec.select("vec_id", "cell", "e"))
-    subs = vec.select(
-        "vec_id",
-        "cell",
-        F.posexplode(
-            F.expr("transform(sequence(0, 7), s -> slice(e, s * 8 + 1, 8))")
-        ).alias("s", "sub"),
-    )
-    sub_d2 = F.round(
-        F.expr(
-            "aggregate(zip_with(sub, cw, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
-        ),
-        8,
-    )
-    return (
-        subs.join(F.broadcast(cb), "s")
-        .select("vec_id", "cell", "s", "c", sub_d2.alias("d2"))
-        .groupBy("vec_id", "cell", "s")
-        .agg(F.min(F.struct("d2", "c")).alias("m"))
-        .select("vec_id", "cell", "s", F.col("m.c").alias("c"))
-    )
+    return pq_encode(pq_subspaces(vec, "vec_id", "cell"), cb, "vec_id", "cell")
 
 
 def ann_insert_batch(spark, db, index: str, vecs: DataFrame) -> None:
     """Insert (vec_id, e: array<double>) rows into an EXISTING index
     under frozen quantizers — the engine behind the ann_index task's
-    incremental mode and stream_ann_ingest.  The PQ layer is inferred
-    from the CATALOG (a ``{index}_codes`` table dispatches encoding;
-    its enc column picks vector vs residual), so callers cannot
+    incremental mode and stream_ann_ingest.  Which code tables to
+    encode into is inferred from the CATALOG (built_method; a PQ
+    codebook's enc column picks vector vs residual), so callers cannot
     disagree with the index.  Replay-safe: new rows come from an
-    anti-join on the vectors table, and the codes self-heal runs even
-    when no new rows exist (a crash between the two appends repairs on
-    the next call)."""
-    from sayn_spark.functions.similarity import _assign_cells
+    anti-join on the vectors table, and every code table's self-heal
+    runs even when no new rows exist (a crash between two appends
+    repairs on the next call)."""
+    from sayn_spark.functions.similarity import (
+        ANN_METHODS,
+        _assign_cells,
+        _norm,
+        built_method,
+        pq_encoding,
+        quantize,
+    )
 
     for t in (f"{index}_centroids", f"{index}_vectors"):
         if not db.table_exists(t):
@@ -648,8 +488,10 @@ def ann_insert_batch(spark, db, index: str, vecs: DataFrame) -> None:
                 f"ann_insert_batch: index table {t} missing — run a full "
                 "ann_index build first"
             )
-    pq = db.table_exists(f"{index}_codes")
-    stored_enc = _stored_encoding(spark, index) if pq else "vector"
+    codes = ANN_METHODS[built_method(db, index)][1]
+    enc = (
+        pq_encoding(spark.table(f"{index}_codebook")) if "_codes" in codes else "vector"
+    )
     cent = spark.table(f"{index}_centroids")
     new = vecs.join(
         spark.table(f"{index}_vectors").select("vec_id"), "vec_id", "left_anti"
@@ -660,72 +502,27 @@ def ann_insert_batch(spark, db, index: str, vecs: DataFrame) -> None:
             "vec_id",
             F.col("cell").cast("bigint").alias("cell"),
             "e",
-            F.sqrt(F.expr("aggregate(e, 0D, (acc, x) -> acc + x * x)")).alias("nrm"),
+            _norm().alias("nrm"),
         ).where(F.col("nrm") > 0)  # index invariant (r14): see run()
-        db.create_table(
-            f"{index}_vectors",
-            vectors,
-            mode="append",
-            bucket_by=(_VEC_BUCKETS, ["cell"]),
-        )
-    if pq:
-        codes_t = f"{index}_codes"
+        db.create_table(f"{index}_vectors", vectors, mode="append", **_BUCKETED)
+    # heal: encode every vector a code table lacks — a cascade heals
+    # both of its layers, each against its own missing set
+    for t in codes:
+        table = f"{index}{t}"
         missing = spark.table(f"{index}_vectors").join(
-            spark.table(codes_t).select("vec_id").distinct(), "vec_id", "left_anti"
+            spark.table(table).select("vec_id").distinct(), "vec_id", "left_anti"
         )
-        if not missing.isEmpty():
-            db.create_table(
-                codes_t,
-                _encode_pq(spark, index, missing, residual=stored_enc == "residual"),
-                mode="append",
-                bucket_by=(_VEC_BUCKETS, ["cell"]),
+        if missing.isEmpty():
+            continue
+        if t == "_codes":
+            rows = _encode_pq(spark, index, missing, enc)
+        else:
+            grid = spark.table(f"{index}_sq8grid")
+            rows = quantize(
+                missing.select("vec_id", "cell", "e"),
+                grid,
+                "vec_id",
+                "cell",
+                out=_GRID_LAYERS[t],
             )
-    if db.table_exists(f"{index}_sq8codes"):
-        # frozen-grid SQ8 encode for any vector missing codes — like
-        # the PQ heal, it runs even when no new rows arrived so a
-        # crash between the two appends repairs on the next call.
-        # Independent `if` (not elif): a cascade index carries BOTH
-        # quantized layers and each must heal
-        from sayn_spark.functions.similarity import sq8_codes_col
-
-        codes_t = f"{index}_sq8codes"
-        missing = spark.table(f"{index}_vectors").join(
-            spark.table(codes_t).select("vec_id").distinct(), "vec_id", "left_anti"
-        )
-        if not missing.isEmpty():
-            db.create_table(
-                codes_t,
-                missing.select("vec_id", "cell", "e")
-                .crossJoin(F.broadcast(spark.table(f"{index}_sq8grid")))
-                .select("vec_id", "cell", sq8_codes_col().alias("c")),
-                mode="append",
-                bucket_by=(_VEC_BUCKETS, ["cell"]),
-            )
-    if db.table_exists(f"{index}_binwords"):
-        # frozen-grid binarisation for any vector missing packed words
-        # — same heal contract as the PQ/SQ8 branches
-        from sayn_spark.functions.similarity import (
-            _BQ_WORDS,
-            _bq_pack_expr,
-            sq8_codes_col,
-        )
-
-        words_t = f"{index}_binwords"
-        missing = spark.table(f"{index}_vectors").join(
-            spark.table(words_t).select("vec_id").distinct(), "vec_id", "left_anti"
-        )
-        if not missing.isEmpty():
-            db.create_table(
-                words_t,
-                missing.select("vec_id", "cell", "e")
-                .crossJoin(F.broadcast(spark.table(f"{index}_sq8grid")))
-                .select("vec_id", "cell", sq8_codes_col().alias("c"))
-                .select(
-                    "vec_id",
-                    "cell",
-                    F.expr(_bq_pack_expr("c", *_BQ_WORDS[0])).alias("w1"),
-                    F.expr(_bq_pack_expr("c", *_BQ_WORDS[1])).alias("w2"),
-                ),
-                mode="append",
-                bucket_by=(_VEC_BUCKETS, ["cell"]),
-            )
+        db.create_table(table, rows, mode="append", **_BUCKETED)

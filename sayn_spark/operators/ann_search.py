@@ -14,22 +14,16 @@ declaratively — the search half of the similarity pipeline as YAML:
         shortlist: 20              # quantized tiers: re-rank width
         shortlist_binary: 50       # cascade only: Hamming-tier width
 
-The path is chosen from the CATALOG, not the config: an index with
-BOTH ``{index}_binwords`` and ``{index}_sq8codes`` (method: cascade)
-searches via the three-tier retrieval cascade — packed Hamming to
-``shortlist_binary``, symmetric SQ8 to ``shortlist``, exact cosine to
-``k`` (functions/similarity.py:ann_index_search_cascade, the
-registered q_ann_cascade_topk shape); one with only
-``{index}_binwords`` via the packed XOR+popcount scan + exact re-rank
-(ann_index_search_binary); one with ``{index}_sq8codes`` via the
-symmetric integer SQ8 scan + exact re-rank (ann_index_search_sq8);
-one with ``{index}_codes`` via ADC + exact re-rank
-(ann_index_search_pq — residual encodings route automatically through
-the codebook's enc column); otherwise the exact in-cell scan
-(ann_index_search).  Only query rows shuffle; the
-bucketed inverted file is read in place.  The destination is a full
-rebuild (replace_table), so re-running a search after an incremental
-index insert refreshes results idempotently.
+The search path is chosen from the CATALOG, not the config: the
+index's method comes from the single method table
+(functions/similarity.py:ANN_METHODS, read back by built_method) and
+ann_catalog_search dispatches on it — cascade through the three-tier
+Hamming (``shortlist_binary``) -> SQ8 (``shortlist``) -> exact cosine
+(``k``) retrieval, ivfbin / ivfsq8 / ivfpq through their quantized scan
++ exact re-rank, ivf through the exact in-cell scan.  Only query rows
+shuffle; the bucketed inverted file is read in place.  The destination
+is a full rebuild (replace_table), so re-running a search after an
+incremental index insert refreshes results idempotently.
 """
 
 from __future__ import annotations

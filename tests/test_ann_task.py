@@ -824,3 +824,77 @@ def test_ann_cascade_incremental_heals_both_layers(ctx, spark, emb_table):
     t.config()
     with pytest.raises(ValueError, match="cascade"):
         t.run()
+
+
+def _queries(spark, n=10):
+    return (
+        spark.table("ann_src")
+        .where(F.col("vec_id") < n)
+        .select(
+            F.col("vec_id").alias("query_id"),
+            F.expr("cast(embedding as array<double>)").alias("e"),
+        )
+    )
+
+
+def test_ann_rebuild_with_new_method_drops_stale_side_tables(ctx, spark, emb_table):
+    """A full rebuild under another method must drop the old method's
+    side tables: a surviving ``{index}_sq8codes`` (cells from the old
+    build) would keep the catalog dispatch on the SQ8 path and return
+    rows that differ from the exact in-cell scan."""
+    from sayn_spark.functions.similarity import ann_catalog_search, built_method
+
+    base = {"source": "ann_src", "index": "ann_stale"}  # hash-seeded cells
+    _build(ctx, spark, "ann_stale_sq8", {**base, "method": "ivfsq8"})
+    assert ctx.db.table_exists("ann_stale_sq8codes")
+    _build(ctx, spark, "ann_stale_pq", {**base, "method": "ivfpq", "n_cells": 5})
+    assert not ctx.db.table_exists("ann_stale_sq8codes")
+    assert not ctx.db.table_exists("ann_stale_sq8grid")
+    assert built_method(ctx.db, "ann_stale") == "ivfpq"
+
+    n_cells = spark.table("ann_stale_centroids").count()
+    queries = _queries(spark)
+    got = sorted(
+        tuple(r)
+        for r in ann_catalog_search(
+            spark, ctx.db, "ann_stale", queries, k=5, nprobe=n_cells, shortlist=100000
+        ).collect()
+    )
+    want = sorted(
+        tuple(r)
+        for r in ann_index_search(spark, "ann_stale", queries, k=5, nprobe=n_cells).collect()
+    )
+    assert got == want and len(got) > 0
+
+
+def test_ann_binary_search_equals_registered_hamming_query(ctx, spark, emb_table):
+    """The binary tier's catalog path and its registered twin share the
+    quantize, shortlist and exact re-rank stages: with every cell probed,
+    ann_index_search_binary over an ivfbin index equals
+    q_ann_binary_hamming projected to (query_id, neighbor_id, cos, rk)."""
+    from sayn_spark.functions.similarity import ann_index_search_binary
+
+    _build(
+        ctx,
+        spark,
+        "ann_binpin",
+        {"source": "ann_src", "index": "ann_binpin", "label_column": "label",
+         "method": "ivfbin"},
+    )
+    n_cells = spark.table("ann_binpin_centroids").count()
+    got = sorted(
+        tuple(r)
+        for r in ann_index_search_binary(
+            spark, "ann_binpin", _queries(spark), k=5, nprobe=n_cells, shortlist=20
+        )
+        .select("query_id", "neighbor_id", "cos", "rk")
+        .collect()
+    )
+    want = sorted(
+        tuple(r)
+        for r in REGISTRY["q_ann_binary_hamming"]
+        .fn(spark, SF)
+        .select("query_id", "neighbor_id", "cos", "rk")
+        .collect()
+    )
+    assert got == want and len(got) == 50

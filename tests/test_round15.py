@@ -24,13 +24,13 @@ def test_sentinel_drift_flag_thresholds():
 def test_bench_json_carries_drift_keys():
     """The contract keys must be additions-only: value/queries stay,
     the drift pair rides along."""
-    import inspect
+    from bench import bench_payload
 
-    import bench
-
-    src = inspect.getsource(bench.main)
-    for key in ("sentinel_drift", "sentinel_contaminated", '"queries"', '"value"'):
-        assert key in src
+    full = bench_payload(
+        "/data/sf0.1", 2, {"q01": [1.0, 0.5, 0.7]}, [0.3, 0.3, 0.3], [0.3, 0.29, 0.31]
+    )
+    for key in ("sentinel_drift", "sentinel_contaminated", "queries", "value"):
+        assert key in full
 
 
 def test_as_local_is_bit_exact_and_local(spark):
@@ -67,3 +67,45 @@ def test_as_local_is_bit_exact_and_local(spark):
     # empty frames degrade to an empty local DataFrame, same schema
     empty = _as_local(src.where("id < 0"))
     assert empty.count() == 0 and empty.schema == src.schema
+
+
+def test_plan_summary_counts_unique_nodes_including_path_scans():
+    """The footer regex must match the two-space ``Scan parquet  (N)``
+    node a path scan prints, and a cached subtree repeated per consumer
+    (same operator ids) must count once."""
+    from capture_plans import plan_summary
+
+    plan = """== Physical Plan ==
+AdaptiveSparkPlan (12)
++- BroadcastHashJoin Inner BuildRight (11)
+   :- InMemoryTableScan (3)
+   :     +- InMemoryRelation (2)
+   :           +- Scan parquet  (1)
+   +- BroadcastExchange (10)
+      +- Window (9)
+         +- InMemoryTableScan (3)
+               +- InMemoryRelation (2)
+                     +- Scan parquet  (1)
+
+
+(1) Scan parquet 
+Output [2]: [vec_id#0L, e#1]
+"""
+    footer = plan_summary(plan)
+    assert "Scan parquet=1\n" in footer
+    assert "InMemoryTableScan=1\n" in footer
+    assert "BroadcastHashJoin=1\n" in footer
+    assert "Window=1\n" in footer
+    assert footer.endswith("total_unique_nodes=7\n")
+
+
+def test_containment_band_overflow_raises_value_error(spark):
+    """The packed-join-key guard must survive ``python -O``: a 2,048-band
+    budget overflows the 10-bit band field and raises ValueError."""
+    import pytest
+
+    from sayn_spark.functions.dedup import _containment_candidates
+
+    sigs = spark.createDataFrame([(1, 0, [1, 2])], "doc_id long, part int, sig array<long>")
+    with pytest.raises(ValueError, match="band budget 2048"):
+        _containment_candidates(sigs, {0: 2048})
