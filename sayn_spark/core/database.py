@@ -12,6 +12,14 @@ string templates become catalog operations + DataFrame writes:
 - replace_view    -> CREATE OR REPLACE VIEW (ref :789-817)
 - merge_tables    -> anti-join+union plan written to a staging table,
                      then swap (ref :678-699 + merge_tables.sql:1-12)
+- stage           -> write a frame to the destination's sayn_tmp_
+                     staging table (ref tasks/autosql.py:184-210)
+- merge_into      -> create-or-merge: a missing destination is built
+                     in full, an existing one takes stage + merge_tables
+                     (ref tasks/autosql.py:326-358)
+- append_into     -> create-or-append: a missing destination is built
+                     in full, an existing one appends unless the frame
+                     is empty
 - load_data       -> spark.createDataFrame().write (ref :513-587)
 - introspection   -> spark.catalog (ref :190-237)
 """
@@ -339,16 +347,18 @@ class SparkDatabase:
         self._ensure_database(name)
         self.spark.sql(f"CREATE OR REPLACE VIEW {name} AS {select}")
 
-    def _table_provider(self, name: str) -> Optional[str]:
-        """'delta' | 'parquet' | ... from DESCRIBE EXTENDED."""
+    def _describe(self, name: str) -> dict:
+        """DESCRIBE TABLE EXTENDED as {col_name: data_type}; empty when
+        the table cannot be described."""
         try:
             rows = self.spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
         except Exception:
-            return None
-        for r in rows:
-            if r.col_name == "Provider":
-                return (r.data_type or "").strip().lower()
-        return None
+            return {}
+        return {r.col_name: (r.data_type or "") for r in rows}
+
+    def _table_provider(self, name: str) -> Optional[str]:
+        """'delta' | 'parquet' | ... from DESCRIBE EXTENDED."""
+        return _provider(self._describe(name))
 
     def table_layout(self, name: str) -> dict:
         """The physical layout of an existing catalog table, in
@@ -359,8 +369,9 @@ class SparkDatabase:
         session defaults silently drops the destination's partitioning
         and can flip its provider, degrading every downstream scan's
         partition pruning (second-pass review r12)."""
+        rows = self._describe(name)
         layout: dict = {
-            "table_format": self._table_provider(name),
+            "table_format": _provider(rows),
             "partition_by": None,
             "bucket_by": None,
             "sort_by": None,
@@ -372,13 +383,6 @@ class SparkDatabase:
         def cols_of(v: str) -> list:
             return [c.strip(" `") for c in v.strip("[]").split(",") if c.strip(" `")]
 
-        try:
-            rows = {
-                r.col_name: (r.data_type or "")
-                for r in self.spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
-            }
-        except Exception:
-            return layout
         if rows.get("Num Buckets") and rows.get("Bucket Columns"):
             layout["bucket_by"] = (
                 int(rows["Num Buckets"]), cols_of(rows["Bucket Columns"])
@@ -403,16 +407,16 @@ class SparkDatabase:
         then swapped in via rename (a table can't be overwritten from a
         plan that reads it).
         """
-        from sayn_spark.plans.materialise import check_merge_columns
-
-        # schema-drift gate for BOTH branches: the Delta INSERT below
-        # lists dst's columns by name, which would silently ignore an
-        # extra src column (and raw-error on a missing one) — same
-        # hazard merge_dataframes had (review r14 second pass)
-        check_merge_columns(
-            self.spark.table(src_name).columns, self.spark.table(dst_name).columns
-        )
         if self.use_delta and self._table_provider(dst_name) == "delta":
+            from sayn_spark.plans.materialise import check_merge_columns
+
+            # schema-drift gate: the INSERT below lists dst's columns by
+            # name, which would silently ignore an extra src column (and
+            # raw-error on a missing one) — merge_dataframes runs the
+            # same gate on the parquet branch (review r14 second pass)
+            check_merge_columns(
+                self.spark.table(src_name).columns, self.spark.table(dst_name).columns
+            )
             keys = [delete_key] if isinstance(delete_key, str) else list(delete_key)
             on = " AND ".join(f"d.{k} = s.{k}" for k in keys)
             key_list = ", ".join(keys)
@@ -440,6 +444,37 @@ class SparkDatabase:
         self.create_table(staging, merged, mode="overwrite", **self.table_layout(dst_name))
         self.move_table(staging, dst_name)
         self.drop_object(src_name)
+
+    # -- incremental writes: how a frame lands in a table that may
+    #    already exist (ref: tasks/autosql.py:326-358) -----------------
+
+    def stage(self, dst: str, df: DataFrame, **writer_opts: Any) -> str:
+        """Write ``df`` to ``dst``'s staging table (dropped first) and
+        return the staging table's name; merge_tables drops it."""
+        tmp = _tmp_name(dst)
+        self.drop_object(tmp)
+        self.create_table(tmp, df, mode="overwrite", **writer_opts)
+        return tmp
+
+    def merge_into(
+        self, dst: str, df: DataFrame, delete_key: str | Sequence[str], **writer_opts: Any
+    ) -> None:
+        """Create-or-merge: a missing ``dst`` is built from ``df`` in
+        full (the reference's full-load fallback); an existing one takes
+        a delete-key merge of ``df`` through a staging table."""
+        if not self.table_exists(dst):
+            self.replace_table(dst, df, **writer_opts)
+        else:
+            self.merge_tables(self.stage(dst, df, **writer_opts), dst, delete_key)
+
+    def append_into(self, dst: str, df: DataFrame, **writer_opts: Any) -> None:
+        """Create-or-append: a missing ``dst`` is built from ``df``; an
+        existing one appends ``df`` unless it is empty, so a rerun over
+        an unchanged source writes no new files."""
+        if not self.table_exists(dst):
+            self.replace_table(dst, df, **writer_opts)
+        elif not df.isEmpty():
+            self.create_table(dst, df, mode="append", **writer_opts)
 
     # -- data loading (ref: database/__init__.py:513-587) ---------------
 
@@ -505,6 +540,12 @@ class SparkDatabase:
         from sayn_spark.plans.materialise import nan_safe_max
 
         return nan_safe_max(self.spark.table(table), column)
+
+
+def _provider(rows: dict) -> Optional[str]:
+    """The lower-cased Provider of a _describe result, if any."""
+    provider = rows.get("Provider")
+    return None if provider is None else provider.strip().lower()
 
 
 def _tmp_name(name: str, suffix: str = "") -> str:

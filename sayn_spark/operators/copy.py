@@ -22,7 +22,6 @@ from typing import Any, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sayn_spark.core.database import _tmp_name
 from sayn_spark.operators.base import Task, TaskStatus
 from sayn_spark.plans.materialise import incremental_filter
 from sayn_spark.sources.registry import read_source
@@ -148,103 +147,93 @@ class CopyTask(Task):
                 db.create_table(self.dst_value, batch, mode="overwrite")
             return
 
-        # mode == "inc": load tmp (chunked if requested) + merge
-        if not db.table_exists(self.dst_value):
-            db.replace_table(self.dst_value, batch)
+        # mode == "inc": create-or-merge, in chunks if requested
+        if not self.max_merge_rows or not db.table_exists(self.dst_value):
+            db.merge_into(self.dst_value, batch, self.delete_key)
             return
+        # drain the NULL-incremental-key rows FIRST, as their own
+        # chunk sequence: the watermark can never page through
+        # NULLs (they don't order against it), so the old single
+        # asc_nulls_first first chunk took at most max_merge_rows
+        # of them and the include_null=False re-derive then
+        # stranded the rest for the run (second-pass review r12).
+        # Pagination is a row_number over the DISTINCT delete keys
+        # (advice r12): the earlier anti-join anchor skipped any
+        # NULL-key row whose delete_key already existed in dst, so
+        # updates carried on NULL-incremental-key rows were silently
+        # dropped — the unchunked inc path re-merges every NULL row
+        # each run, and chunking must not change that.  Ranking
+        # keys (not rows) also keeps one delete_key inside one
+        # chunk: a key split across merges would have its first
+        # chunk's rows deleted by its second chunk's merge.  A
+        # chunk therefore holds max_merge_rows KEYS and can exceed
+        # that in rows when keys repeat — the same hot-key caveat
+        # the watermark loop documents.  eqNullSafe keeps rows with
+        # NULL delete keys drainable (an equi-join would strand
+        # them in every chunk's complement).
+        from pyspark.sql.window import Window
+
+        keys = (
+            [self.delete_key]
+            if isinstance(self.delete_key, str)
+            else list(self.delete_key)
+        )
+        src_nulls = batch.where(F.col(self.incremental_key).isNull())
+        keyrank = (
+            src_nulls.select(*keys)
+            .distinct()
+            .withColumn(
+                "__sayn_kr__",
+                F.row_number().over(Window.orderBy(*[F.col(k) for k in keys])),
+            )
+        )
+        total_keys = keyrank.count()
+        offset = 0
+        # the drain has its OWN iteration budget (advice r13): sharing
+        # the cap with the watermark loop meant a large NULL backlog
+        # could exhaust it and silently skip watermark rows, and the
+        # watermark loop's while-else warning then reported the
+        # NULL-drain's row count as "the last merged chunk".
+        drain_iterations = 0
+        while offset < total_keys and drain_iterations < MAX_MERGE_ITERATIONS:
+            kchunk = keyrank.where(
+                (F.col("__sayn_kr__") > offset)
+                & (F.col("__sayn_kr__") <= offset + self.max_merge_rows)
+            ).drop("__sayn_kr__")
+            cond = None
+            for k in keys:
+                c = src_nulls[k].eqNullSafe(kchunk[k])
+                cond = c if cond is None else (cond & c)
+            chunk = src_nulls.join(kchunk, cond, "left_semi")
+            db.merge_into(self.dst_value, chunk, self.delete_key)
+            offset += self.max_merge_rows
+            drain_iterations += 1
+        if offset < total_keys:
+            import logging
+
+            logging.getLogger("sayn_spark").warning(
+                "copy task %r: NULL-incremental-key drain hit its "
+                "iteration cap (%d) with %d of %d delete keys still "
+                "pending — those NULL-key rows were NOT merged this run "
+                "(they will be retried next run; raise max_merge_rows=%s "
+                "to drain faster)",
+                self.name,
+                MAX_MERGE_ITERATIONS,
+                total_keys - offset,
+                total_keys,
+                self.max_merge_rows,
+            )
+        batch = batch.where(F.col(self.incremental_key).isNotNull())
         iterations = 0
-        n = 0
-        if self.max_merge_rows:
-            # drain the NULL-incremental-key rows FIRST, as their own
-            # chunk sequence: the watermark can never page through
-            # NULLs (they don't order against it), so the old single
-            # asc_nulls_first first chunk took at most max_merge_rows
-            # of them and the include_null=False re-derive then
-            # stranded the rest for the run (second-pass review r12).
-            # Pagination is a row_number over the DISTINCT delete keys
-            # (advice r12): the earlier anti-join anchor skipped any
-            # NULL-key row whose delete_key already existed in dst, so
-            # updates carried on NULL-incremental-key rows were silently
-            # dropped — the unchunked inc path re-merges every NULL row
-            # each run, and chunking must not change that.  Ranking
-            # keys (not rows) also keeps one delete_key inside one
-            # chunk: a key split across merges would have its first
-            # chunk's rows deleted by its second chunk's merge.  A
-            # chunk therefore holds max_merge_rows KEYS and can exceed
-            # that in rows when keys repeat — the same hot-key caveat
-            # the watermark loop documents.  eqNullSafe keeps rows with
-            # NULL delete keys drainable (an equi-join would strand
-            # them in every chunk's complement).
-            from pyspark.sql.window import Window
-
-            keys = (
-                [self.delete_key]
-                if isinstance(self.delete_key, str)
-                else list(self.delete_key)
-            )
-            src_nulls = batch.where(F.col(self.incremental_key).isNull())
-            keyrank = (
-                src_nulls.select(*keys)
-                .distinct()
-                .withColumn(
-                    "__sayn_kr__",
-                    F.row_number().over(Window.orderBy(*[F.col(k) for k in keys])),
-                )
-            )
-            total_keys = keyrank.count()
-            offset = 0
-            # the drain has its OWN iteration budget (advice r13): sharing
-            # the cap with the watermark loop meant a large NULL backlog
-            # could exhaust it and silently skip watermark rows, and the
-            # watermark loop's while-else warning then reported the
-            # NULL-drain's row count as "the last merged chunk".
-            drain_iterations = 0
-            while offset < total_keys and drain_iterations < MAX_MERGE_ITERATIONS:
-                kchunk = keyrank.where(
-                    (F.col("__sayn_kr__") > offset)
-                    & (F.col("__sayn_kr__") <= offset + self.max_merge_rows)
-                ).drop("__sayn_kr__")
-                cond = None
-                for k in keys:
-                    c = src_nulls[k].eqNullSafe(kchunk[k])
-                    cond = c if cond is None else (cond & c)
-                chunk = src_nulls.join(kchunk, cond, "left_semi")
-                tmp = _tmp_name(self.dst_value)
-                db.drop_object(tmp)
-                db.create_table(tmp, chunk)
-                n = self.context.spark.table(tmp).count()
-                db.merge_tables(tmp, self.dst_value, self.delete_key)
-                offset += self.max_merge_rows
-                drain_iterations += 1
-            if offset < total_keys:
-                import logging
-
-                logging.getLogger("sayn_spark").warning(
-                    "copy task %r: NULL-incremental-key drain hit its "
-                    "iteration cap (%d) with %d of %d delete keys still "
-                    "pending — those NULL-key rows were NOT merged this run "
-                    "(they will be retried next run; raise max_merge_rows=%s "
-                    "to drain faster)",
-                    self.name,
-                    MAX_MERGE_ITERATIONS,
-                    total_keys - offset,
-                    total_keys,
-                    self.max_merge_rows,
-                )
-            batch = batch.where(F.col(self.incremental_key).isNotNull())
         while iterations < MAX_MERGE_ITERATIONS:
-            chunk = batch
-            if self.max_merge_rows:
-                chunk = batch.orderBy(F.col(self.incremental_key).asc()).limit(
-                    self.max_merge_rows
-                )
-            tmp = _tmp_name(self.dst_value)
-            db.drop_object(tmp)
-            db.create_table(tmp, chunk)
+            chunk = batch.orderBy(F.col(self.incremental_key).asc()).limit(
+                self.max_merge_rows
+            )
+            tmp = db.stage(self.dst_value, chunk)
             n = self.context.spark.table(tmp).count()
             db.merge_tables(tmp, self.dst_value, self.delete_key)
             iterations += 1
-            if not self.max_merge_rows or n < self.max_merge_rows:
+            if n < self.max_merge_rows:
                 break
             # next chunk: re-derive the watermark from the merged dst
             last_max = db.get_max_value(self.dst_value, self.incremental_key)

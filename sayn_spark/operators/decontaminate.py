@@ -212,13 +212,9 @@ class DecontaminateTask(Task):
                 "is_contaminated", F.coalesce("is_contaminated", F.lit(False))
             )
         if incremental:
-            if not out.isEmpty():
-                self.context.db.create_table(
-                    self.dst_value,
-                    out,
-                    mode="append",
-                    **self.destination_writer_opts(),
-                )
+            self.context.db.append_into(
+                self.dst_value, out, **self.destination_writer_opts()
+            )
         else:
             self.context.db.replace_table(
                 self.dst_value, out, **self.destination_writer_opts()

@@ -965,20 +965,7 @@ class DedupTask(Task):
                     self.id_column,
                     "left_anti",
                 )
-                if not novel.isEmpty():
-                    db.create_table(
-                        self.dst_value,
-                        novel,
-                        mode="append",
-                        **self.destination_writer_opts(),
-                    )
-            else:
-                db.create_table(
-                    self.dst_value,
-                    novel,
-                    mode="overwrite",
-                    **self.destination_writer_opts(),
-                )
+            db.append_into(self.dst_value, novel, **self.destination_writer_opts())
 
     def _run_incremental_passages(self) -> None:
         """Recurring-crawl span dedup: the fingerprint index maps every
@@ -1043,10 +1030,7 @@ class DedupTask(Task):
                 new_idx = new_idx.join(
                     spark.table(self.index_table).select("h"), "h", "left_anti"
                 )
-                if not new_idx.isEmpty():
-                    db.create_table(self.index_table, new_idx, mode="append")
-            else:
-                db.create_table(self.index_table, new_idx, mode="overwrite")
+            db.append_into(self.index_table, new_idx)
             # 2) destination append: every batch doc, text rewritten
             out = docs.drop(self.text_column).join(
                 cleaned.select(
@@ -1055,21 +1039,7 @@ class DedupTask(Task):
                 ).hint("shuffle_hash"),
                 self.id_column,
             )
-            if db.table_exists(self.dst_value):
-                if not out.isEmpty():
-                    db.create_table(
-                        self.dst_value,
-                        out,
-                        mode="append",
-                        **self.destination_writer_opts(),
-                    )
-            else:
-                db.create_table(
-                    self.dst_value,
-                    out,
-                    mode="overwrite",
-                    **self.destination_writer_opts(),
-                )
+            db.append_into(self.dst_value, out, **self.destination_writer_opts())
         finally:
             release_persisted()
 

@@ -192,13 +192,9 @@ class EmbedTask(Task):
             )
         out = emb.select(F.col("doc_id").alias(self.id_column), "embedding")
         if incremental:
-            if not out.isEmpty():
-                self.context.db.create_table(
-                    self.dst_value,
-                    out,
-                    mode="append",
-                    **self.destination_writer_opts(),
-                )
+            self.context.db.append_into(
+                self.dst_value, out, **self.destination_writer_opts()
+            )
         else:
             self.context.db.replace_table(
                 self.dst_value, out, **self.destination_writer_opts()

@@ -826,13 +826,9 @@ class FilterTask(Task):
             if clash:
                 out = out.withColumnRenamed("__sayn_orig_text__", "text")
         if incremental:
-            if not out.isEmpty():
-                self.context.db.create_table(
-                    self.dst_value,
-                    out,
-                    mode="append",
-                    **self.destination_writer_opts(),
-                )
+            self.context.db.append_into(
+                self.dst_value, out, **self.destination_writer_opts()
+            )
         else:
             self.context.db.replace_table(
                 self.dst_value, out, **self.destination_writer_opts()

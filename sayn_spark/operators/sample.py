@@ -159,13 +159,7 @@ class SampleTask(Task):
                 # identical to a full rebuild over the union
                 seen = spark.table(self.dst_value).select(self.id_column)
                 new = self._run_hash(df.join(seen, self.id_column, "left_anti"))
-                if not new.isEmpty():
-                    db.create_table(
-                        self.dst_value,
-                        new,
-                        mode="append",
-                        **self.destination_writer_opts(),
-                    )
+                db.append_into(self.dst_value, new, **self.destination_writer_opts())
                 return
             out = self._run_hash(df)
         else:

@@ -7,14 +7,57 @@ table with the same delete-key semantics as the batch engine
 Structured Streaming's hook for sinks that need arbitrary batch logic.
 The checkpoint gives exactly-once *input* processing; the merge itself
 is idempotent on the delete key, so replayed batches converge.
+
+Every twin in this module runs through one runner, ``_foreach_batch``:
+it owns the ``writeStream`` chain (checkpoint, ``availableNow``
+trigger), the empty-batch skip, the per-trigger ``SparkDatabase`` and
+the outer-session refresh of the tables a trigger rewrote.  A twin only
+supplies the per-batch handler, which writes through
+``SparkDatabase.merge_into`` like the batch tasks do.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sayn_spark.core.database import SparkDatabase, _tmp_name
+from sayn_spark.core.database import SparkDatabase
+
+
+def _foreach_batch(
+    source: DataFrame,
+    checkpoint: str,
+    handle: Callable[[SparkDatabase, DataFrame, int], list],
+    skip_empty: bool = True,
+):
+    """Start ``source`` as an ``availableNow`` stream that calls
+    ``handle(db, batch_df, batch_id)`` once per non-empty micro-batch
+    and refreshes every table name the handler returns.
+
+    foreachBatch runs in a CLONED session whose relation cache is
+    separate from the caller's; the refresh goes through the source
+    session so readers outside the stream see the post-write files (a
+    stale listing of a rename-swapped table is a FileNotFoundException
+    on the next read, not just stale rows).  ``skip_empty=False`` hands
+    empty batches to a handler that runs its own emptiness check.
+    """
+    outer_session = source.sparkSession
+
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        if skip_empty and batch_df.isEmpty():
+            return
+        db = SparkDatabase(batch_df.sparkSession)
+        for table in handle(db, batch_df, batch_id):
+            outer_session.catalog.refreshTable(table)
+
+    return (
+        source.writeStream.foreachBatch(_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def stream_merge_into(
@@ -31,31 +74,11 @@ def stream_merge_into(
     full rebuild.
     """
 
-    # foreachBatch runs in a CLONED session whose relation cache is
-    # separate from the caller's; refresh through the source session so
-    # readers outside the stream see the post-merge files
-    outer_session = source.sparkSession
+    def _merge_batch(db: SparkDatabase, batch_df: DataFrame, batch_id: int) -> list:
+        db.merge_into(dst_table, batch_df, delete_key)
+        return [dst_table]
 
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        db = SparkDatabase(spark)
-        if batch_df.isEmpty():
-            return
-        if not db.table_exists(dst_table):
-            db.create_table(dst_table, batch_df, mode="overwrite")
-        else:
-            staging = _tmp_name(dst_table, f"_stream_{batch_id}")
-            db.drop_object(staging)
-            db.create_table(staging, batch_df, mode="overwrite")
-            db.merge_tables(staging, dst_table, delete_key)
-        outer_session.catalog.refreshTable(dst_table)
-
-    return (
-        source.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(source, checkpoint, _merge_batch)
 
 
 _BAND_BUCKETS = 32  # bucket count for the persisted band index
@@ -329,15 +352,9 @@ def dedup_ingest_batch(
         "ingest_id", F.lit(batch_id).cast("long")
     ).localCheckpoint()
     if not matches.isEmpty():
-        if db.table_exists(matches_table):
-            staging = _tmp_name(matches_table, f"_stream_{batch_id}")
-            db.drop_object(staging)
-            db.create_table(staging, matches, mode="overwrite")
-            # delete-before-append on the trigger id: replay replaces,
-            # never duplicates (Delta destinations take the MERGE path)
-            db.merge_tables(staging, matches_table, "ingest_id")
-        else:
-            db.create_table(matches_table, matches, mode="overwrite")
+        # delete-before-append on the trigger id: replay replaces,
+        # never duplicates (Delta destinations take the MERGE path)
+        db.merge_into(matches_table, matches, "ingest_id")
     kept = sigs.join(
         matches.select(F.col("batch_id").alias("doc_id")).distinct(),
         "doc_id",
@@ -412,29 +429,22 @@ def stream_dedup_ingest(
     and the same call becomes a keyed MERGE touching only that
     trigger's files.
     """
-    outer_session = source.sparkSession
 
-    def _ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def _ingest_batch(db: SparkDatabase, batch_df: DataFrame, batch_id: int) -> list:
         dedup_ingest_batch(
             batch_df, batch_id, index_table, matches_table, sf_dir,
             band_table=band_table, method=method, **method_opts,
         )
-        # refresh EVERY table the trigger may have rewritten in the
-        # outer session's relation cache — matches_table is
-        # rename-swapped per trigger (a stale file listing there is a
-        # FileNotFoundException on the outer session's next read, not
-        # just stale rows), band_table appends
-        db = SparkDatabase(batch_df.sparkSession)
-        for t in (index_table, matches_table, band_table):
-            if t is not None and db.table_exists(t):
-                outer_session.catalog.refreshTable(t)
+        # EVERY table the trigger may have rewritten: matches_table is
+        # rename-swapped per trigger, band_table appends
+        return [
+            t for t in (index_table, matches_table, band_table)
+            if t is not None and db.table_exists(t)
+        ]
 
-    return (
-        source.writeStream.foreachBatch(_ingest_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    # dedup_ingest_batch skips an empty batch itself (the dedup task
+    # calls it directly)
+    return _foreach_batch(source, checkpoint, _ingest_batch, skip_empty=False)
 
 
 def stream_decontaminate(
@@ -479,25 +489,20 @@ def stream_decontaminate(
         raise ValueError(
             "stream_decontaminate: min_overlap_frac applies to method=ngram"
         )
-    outer_session = source.sparkSession
     min_ppm = None if min_overlap_frac is None else round(float(min_overlap_frac) * 1_000_000)
 
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        db = SparkDatabase(spark)
-        if batch_df.isEmpty():
-            return
+    def _batch(db: SparkDatabase, batch_df: DataFrame, batch_id: int) -> list:
         if method == "semantic":
             contaminated = semantic_contaminated_ids(
                 batch_df.select(id_column, "text"),
-                spark.table(eval_table),
+                db.spark.table(eval_table),
                 id_column=id_column,
                 min_cosine_hundredths=min_cosine_hundredths,
             )
         else:
             contaminated = contaminated_ids_frame(
                 batch_df,
-                spark.table(eval_table),
+                db.spark.table(eval_table),
                 ngram,
                 id_column=id_column,
                 min_overlap_ppm=min_ppm,
@@ -505,21 +510,10 @@ def stream_decontaminate(
         kept = batch_df.join(contaminated, id_column, "left_anti").withColumn(
             "ingest_id", F.lit(batch_id).cast("long")
         )
-        if db.table_exists(dst_table):
-            staging = _tmp_name(dst_table, f"_stream_{batch_id}")
-            db.drop_object(staging)
-            db.create_table(staging, kept, mode="overwrite")
-            db.merge_tables(staging, dst_table, "ingest_id")
-        else:
-            db.create_table(dst_table, kept, mode="overwrite")
-        outer_session.catalog.refreshTable(dst_table)
+        db.merge_into(dst_table, kept, "ingest_id")
+        return [dst_table]
 
-    return (
-        source.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(source, checkpoint, _batch)
 
 
 def stream_surprisal_filter(
@@ -547,17 +541,11 @@ def stream_surprisal_filter(
     """
     from sayn_spark.functions.text import score_against_vocab
 
-    outer_session = source.sparkSession
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        db = SparkDatabase(spark)
-        if batch_df.isEmpty():
-            return
+    def _batch(db: SparkDatabase, batch_df: DataFrame, batch_id: int) -> list:
         work = batch_df.where(F.col("text").isNotNull())
         scored = score_against_vocab(
             work.select(F.col(id_column).alias("doc_id"), "text"),
-            spark.table(vocab_table),
+            db.spark.table(vocab_table),
         )
         keep_ids = scored.where(F.col("avg_nll") <= float(max_avg_nll)).select(
             F.col("doc_id").alias(id_column)
@@ -565,21 +553,10 @@ def stream_surprisal_filter(
         kept = work.join(keep_ids, id_column, "left_semi").withColumn(
             "ingest_id", F.lit(batch_id).cast("long")
         )
-        if db.table_exists(dst_table):
-            staging = _tmp_name(dst_table, f"_stream_{batch_id}")
-            db.drop_object(staging)
-            db.create_table(staging, kept, mode="overwrite")
-            db.merge_tables(staging, dst_table, "ingest_id")
-        else:
-            db.create_table(dst_table, kept, mode="overwrite")
-        outer_session.catalog.refreshTable(dst_table)
+        db.merge_into(dst_table, kept, "ingest_id")
+        return [dst_table]
 
-    return (
-        source.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(source, checkpoint, _batch)
 
 
 def stream_route_media(
@@ -609,31 +586,14 @@ def stream_route_media(
     — and only the typed metadata rows are written."""
     from sayn_spark.functions.multimodal import route_media_frame
 
-    outer_session = source.sparkSession
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        db = SparkDatabase(spark)
-        if batch_df.isEmpty():
-            return
+    def _batch(db: SparkDatabase, batch_df: DataFrame, batch_id: int) -> list:
         routed = route_media_frame(
             batch_df, id_column=id_column, payload_column=payload_column
         ).withColumn("ingest_id", F.lit(batch_id).cast("long"))
-        if db.table_exists(dst_table):
-            staging = _tmp_name(dst_table, f"_stream_{batch_id}")
-            db.drop_object(staging)
-            db.create_table(staging, routed, mode="overwrite")
-            db.merge_tables(staging, dst_table, "ingest_id")
-        else:
-            db.create_table(dst_table, routed, mode="overwrite")
-        outer_session.catalog.refreshTable(dst_table)
+        db.merge_into(dst_table, routed, "ingest_id")
+        return [dst_table]
 
-    return (
-        source.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(source, checkpoint, _batch)
 
 
 def stream_ann_ingest(
@@ -660,30 +620,21 @@ def stream_ann_ingest(
     from sayn_spark.functions.similarity import ANN_METHODS, built_method
     from sayn_spark.operators.ann import ann_insert_batch
 
-    outer_session = source.sparkSession
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def _batch(db: SparkDatabase, batch_df: DataFrame, batch_id: int) -> list:
         vecs = batch_df.select(
             F.col(id_column).alias("vec_id"),
             F.expr(f"cast({vector_column} as array<double>)").alias("e"),
         )
-        db = SparkDatabase(spark)
-        ann_insert_batch(spark, db, index, vecs)
+        ann_insert_batch(db.spark, db, index, vecs)
         # every table an insert appends to: a stale code table in the
         # outer session would silently drop the new vectors from that
         # shortlist tier of catalog searches
-        for suffix in ("_vectors", *ANN_METHODS[built_method(db, index)][1]):
-            outer_session.catalog.refreshTable(f"{index}{suffix}")
+        return [
+            f"{index}{suffix}"
+            for suffix in ("_vectors", *ANN_METHODS[built_method(db, index)][1])
+        ]
 
-    return (
-        source.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(source, checkpoint, _batch)
 
 
 def stream_chunk(
@@ -709,13 +660,7 @@ def stream_chunk(
     """
     from sayn_spark.operators.chunk import chunk_frame
 
-    outer_session = source.sparkSession
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        db = SparkDatabase(spark)
-        if batch_df.isEmpty():
-            return
+    def _batch(db: SparkDatabase, batch_df: DataFrame, batch_id: int) -> list:
         chunks = chunk_frame(
             batch_df,
             chunk_tokens=chunk_tokens,
@@ -724,21 +669,10 @@ def stream_chunk(
             id_column=id_column,
             text_column=text_column,
         ).withColumn("ingest_id", F.lit(batch_id).cast("long"))
-        if db.table_exists(dst_table):
-            staging = _tmp_name(dst_table, f"_stream_{batch_id}")
-            db.drop_object(staging)
-            db.create_table(staging, chunks, mode="overwrite")
-            db.merge_tables(staging, dst_table, "ingest_id")
-        else:
-            db.create_table(dst_table, chunks, mode="overwrite")
-        outer_session.catalog.refreshTable(dst_table)
+        db.merge_into(dst_table, chunks, "ingest_id")
+        return [dst_table]
 
-    return (
-        source.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(source, checkpoint, _batch)
 
 
 def stream_ann_search(
@@ -770,19 +704,13 @@ def stream_ann_search(
     """
     from sayn_spark.functions.similarity import ann_catalog_search
 
-    outer_session = source.sparkSession
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        db = SparkDatabase(spark)
+    def _batch(db: SparkDatabase, batch_df: DataFrame, batch_id: int) -> list:
         queries = batch_df.select(
             F.col(id_column).alias("query_id"),
             F.expr(f"cast({vector_column} as array<double>)").alias("e"),
         )
         out = ann_catalog_search(
-            spark,
+            db.spark,
             db,
             index,
             queries,
@@ -791,18 +719,7 @@ def stream_ann_search(
             shortlist=shortlist,
             shortlist_binary=shortlist_binary,
         )
-        if not db.table_exists(dst_table):
-            db.create_table(dst_table, out, mode="overwrite")
-        else:
-            staging = _tmp_name(dst_table, f"_annq_{batch_id}")
-            db.drop_object(staging)
-            db.create_table(staging, out, mode="overwrite")
-            db.merge_tables(staging, dst_table, "query_id")
-        outer_session.catalog.refreshTable(dst_table)
+        db.merge_into(dst_table, out, "query_id")
+        return [dst_table]
 
-    return (
-        source.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(source, checkpoint, _batch)
